@@ -5,7 +5,8 @@ Catalyst prune columns).
 Set-up starts from an empty artifact store and runs every query once with
 ``collect()``: that pass builds the artifacts, warms the JVM and yields the
 rows checked against each query's registered DuckDB oracle with the
-``tests/conftest.py`` comparator. Four timed noop passes follow. One
+``tests/conftest.py`` comparator. One untimed noop pass ends the set-up;
+three timed noop passes follow. One
 operation is one query call, ``Query.spark(...)`` plus its noop write.
 """
 
@@ -19,8 +20,9 @@ from harness import Run, group_counts, median, percentile
 
 SF = 0.01
 #: timed passes per run: a fixed count, so every run measures the same work.
-#: Medians over four absorb the first noop pass, which ran ~15% slower.
-PASSES = 4
+#: The first two noop passes ran 10-40% slower than the later ones, so
+#: one of them is set-up and the medians over three absorb the other.
+PASSES = 3
 #: one query per family of the registry; ``ann_ivf_cosine`` builds two
 #: artifacts. README.md says why the set is not larger.
 FAMILIES = {
@@ -86,7 +88,7 @@ def run(run: Run) -> dict:
     from iot_sparkstreaming_spark.queries.registry import load_all
 
     run.start_gen("tables", "--sf", str(0.001 if run.tiny else SF))
-    run.setup_sessions()
+    run.first_session()
     run.wait_gen()
     sf_dir = run.path("gen")
     registry = load_all()
@@ -97,15 +99,29 @@ def run(run: Run) -> dict:
         df = registry[name].spark(run.spark, sf_dir)
         results[name] = (registry[name].oracle, _Collected(df.columns, df.collect()))
         run.mark(f"prep.{name}")
+    _pass(run, registry, sf_dir, "w")
     setup_s = run.finish_setup(time.perf_counter() - t)
     built = dict(artifacts.BUILD_TIMES)
 
+    def traced_pass() -> dict[str, tuple[float, float]]:
+        run.hooks = True
+        try:
+            return _pass(run, registry, sf_dir, "t")
+        finally:
+            run.hooks = False
+
+    # a traced run adds one traced pass; odd seeds run it first, so that
+    # warm-up drift does not always favour the same side of the overhead
+    traced = traced_pass() if run.trace and run.seed % 2 else None
     passes = [_pass(run, registry, sf_dir, f"p{i}") for i in range(PASSES)]
+    if run.trace and traced is None:
+        traced = traced_pass()
     walls = [sum(b + a for b, a in p.values()) for p in passes]
     run.marks["pass_walls"] = walls
     # a query's latency is its median over the passes; percentiles then run
     # over the queries, so one slow call does not move them on its own
     lat = [median([sum(p[n]) for p in passes]) * 1000.0 for n in QUERIES]
+    run.marks["query_ms"] = dict(zip(QUERIES, lat))
     bad = _check(results, sf_dir)
     for name, msg in bad.items():
         print(f"perfbench: {name} differs from its oracle: {msg}", file=sys.stderr)
@@ -127,9 +143,6 @@ def run(run: Run) -> dict:
     if not run.trace:
         return out
 
-    run.hooks = True
-    traced = _pass(run, registry, sf_dir, "t")
-    run.hooks = False
     tlat = [(b + a) * 1000.0 for b, a in traced.values()]
     twall = sum(b + a for b, a in traced.values())
     out["traced_e2e"] = {"latency_p50_ms": percentile(tlat, 50),

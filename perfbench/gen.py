@@ -32,6 +32,22 @@ BP_CATS = ("NORMAL", "PRE_HYP", "HYP_1", "HYP_2", "HYP_CR")
 HYPERTENSIVE = ("HYP_1", "HYP_2", "HYP_CR")
 THRESHOLD = 0.95
 FILE_PERIOD_S = 0.1
+#: open-loop rate of the live windows (events per second) and the user
+#: population they draw from
+RATE = 2000
+USERS = 20000
+#: how long the live mode waits for a window's go signal
+WAIT_S = 170.0
+#: the replay backlog: files of EVENTS_PER_FILE fitbit events whose user ids
+#: come from a window of ACTIVE users that moves CHURN_STEP ids per file;
+#: DUP_SHARE of the events are sent twice. The warm-up backlog is one file
+#: of WARM_EVENTS: it runs the same code paths, and its size does not matter.
+BACKLOG_FILES = 2
+EVENTS_PER_FILE = 5000
+WARM_EVENTS = 1000
+ACTIVE = 1000
+CHURN_STEP = 500
+DUP_SHARE = 0.02
 
 
 # ---------------------------------------------------------------------------
@@ -118,18 +134,18 @@ def _atomic_json(path: str, obj) -> None:
 # ---------------------------------------------------------------------------
 
 
-def render_live_window(seed: int, window: str, seconds: float, rate: int, users: int):
+def render_live_window(seed: int, window: str, seconds: float):
     """Templates for one window: per file, the lines and the alerts in it.
     ``@TS@`` stands for the file's due time, known only once the window
     starts."""
     rng = random.Random(f"{seed}:live:{window}")
-    per_file = max(1, round(rate * FILE_PERIOD_S))
+    per_file = max(1, round(RATE * FILE_PERIOD_S))
     files = []
     for i in range(max(1, round(seconds / FILE_PERIOD_S))):
         lines, alerts = [], []
         for _ in range(per_file):
             r = rng.random()
-            user = f"u{rng.randrange(users):05d}"
+            user = f"u{rng.randrange(USERS):05d}"
             if r < 0.8:
                 rec = fitbit_fields(rng, user, "2024-01-01 00:00:00", 0.06)
                 lines.append(fitbit_line(rec, "@TS@"))
@@ -146,20 +162,19 @@ def render_live_window(seed: int, window: str, seconds: float, rate: int, users:
 
 def run_live(args) -> None:
     churn = stage_backlog(os.path.join(args.out, "backlog"), random.Random(f"{args.seed}:replay"),
-                          args, args.files)
-    stage_backlog(os.path.join(args.out, "warm"), random.Random(f"{args.seed}:warm"),
-                  args, args.warm_files)
+                          args.files, EVENTS_PER_FILE)
+    stage_backlog(os.path.join(args.out, "warm"), random.Random(f"{args.seed}:warm"), 1, WARM_EVENTS)
     _atomic_json(os.path.join(args.out, "churn.json"), churn)
     windows = [w.split(":") for w in args.windows.split(",")]
     rendered = {
-        name: render_live_window(args.seed, name, float(sec), args.rate, args.users)
+        name: render_live_window(args.seed, name, float(sec))
         for name, sec in windows
     }
     os.makedirs(os.path.join(args.out, "stage"), exist_ok=True)
     _atomic_json(os.path.join(args.out, "gen_ready.json"), {"pid": os.getpid()})
     for name, _sec in windows:
         go = os.path.join(args.out, f"go.{name}")
-        deadline = time.time() + args.wait_s
+        deadline = time.time() + WAIT_S
         while not os.path.exists(go):
             if time.time() > deadline:
                 sys.exit(f"gen: no go signal for window {name}")
@@ -214,24 +229,24 @@ def expected_table(alerts: list[dict]) -> dict[str, dict]:
 # ---------------------------------------------------------------------------
 
 
-def stage_backlog(out: str, rng: random.Random, args, n_files: int) -> dict:
+def stage_backlog(out: str, rng: random.Random, n_files: int, per_file: int) -> dict:
     os.makedirs(out, exist_ok=True)
     base_s = 1_704_067_200  # 2024-01-01 00:00:00 UTC
     churn = []
     n = 0
     for fi in range(n_files):
-        lo = fi * args.churn_step
-        churn.append({"file": f"b-{fi:05d}.csv", "active_lo": lo, "active_hi": lo + args.active})
+        lo = fi * CHURN_STEP
+        churn.append({"file": f"b-{fi:05d}.csv", "active_lo": lo, "active_hi": lo + ACTIVE})
         lines = []
-        for _ in range(args.events_per_file):
-            user = f"u{rng.randrange(lo, lo + args.active):06d}"
+        for _ in range(per_file):
+            user = f"u{rng.randrange(lo, lo + ACTIVE):06d}"
             # one event per event-time second and per millisecond of
             # machine time: every (user, time) key and order is unique
             dt = time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime(base_s + n))
             rec = fitbit_fields(rng, user, dt, 0.35)
             line = fitbit_line(rec, str(1_704_067_200_000 + n))
             lines.append(line)
-            if rng.random() < args.dup_share:
+            if rng.random() < DUP_SHARE:
                 lines.append(line)  # at-least-once re-send
             n += 1
         p = os.path.join(out, f"b-{fi:05d}.csv")
@@ -377,18 +392,10 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     sub = ap.add_subparsers(dest="mode", required=True)
     t = sub.add_parser("tables")
-    t.add_argument("--sf", type=float, default=0.01)
+    t.add_argument("--sf", type=float, required=True)
     lv = sub.add_parser("live")
     lv.add_argument("--windows", required=True, help="name:seconds,...")
-    lv.add_argument("--rate", type=int, default=2000)
-    lv.add_argument("--users", type=int, default=20000)
-    lv.add_argument("--wait-s", type=float, default=170.0)
-    lv.add_argument("--files", type=int, default=9, help="replay backlog files")
-    lv.add_argument("--warm-files", type=int, default=2)
-    lv.add_argument("--events-per-file", type=int, default=500)
-    lv.add_argument("--active", type=int, default=600)
-    lv.add_argument("--churn-step", type=int, default=15)
-    lv.add_argument("--dup-share", type=float, default=0.02)
+    lv.add_argument("--files", type=int, default=BACKLOG_FILES, help="replay backlog files")
     for p in (t, lv):
         p.add_argument("--seed", type=int, required=True)
         p.add_argument("--out", required=True)

@@ -20,8 +20,6 @@ from datetime import datetime
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ENGINE = "iot_sparkstreaming_spark"
-#: set-up is repeated this many times per run and its median reported
-SETUP_REPS = 3
 
 
 def percentile(xs: list[float], q: float) -> float:
@@ -46,7 +44,7 @@ class Run:
         self.seed = seed
         self.seconds = seconds
         self.trace = trace
-        #: tracing hooks (job groups, per-batch JSON lines) are on only for
+        #: tracing hooks (job groups, per-batch records) are on only for
         #: the traced part of a traced run; the rest of it is the untraced
         #: reference its overhead is taken against
         self.hooks = False
@@ -63,8 +61,9 @@ class Run:
         self.cpus = max(1, min(3, (os.cpu_count() or 1) - 1))
         self.gen: subprocess.Popen | None = None
         self.spark = None
-        self.progress = ProgressLog(self, os.path.join(self.dir, "progress.jsonl"))
-        self.setup_times: list[float] = []
+        self.progress = ProgressLog(self)
+        #: process start to the first session ready: imports, JVM launch
+        self.session_s = 0.0
         self.marks: dict[str, object] = {}
         self._configure_env()
 
@@ -124,8 +123,7 @@ class Run:
     # -- session ---------------------------------------------------------------
     def start_session(self, cpus: int | None = None):
         """(Re)start the engine's session through ``session.get_spark`` and
-        register what every workload uses. Returns the seconds it took."""
-        t = time.perf_counter()
+        register what every workload uses."""
         if self.spark is not None:
             self.spark.stop()
         if cpus is not None:
@@ -137,22 +135,20 @@ class Run:
         keyed_sink.register(self.spark)
         self.spark.streams.addListener(self.progress.listener())
         self.spark.range(1).collect()
-        return time.perf_counter() - t
 
-    def setup_sessions(self) -> None:
-        """Start the session SETUP_REPS times. The first start is timed from
-        process start (imports, JVM launch); the others restart it."""
+    def first_session(self) -> None:
+        """Start the session, timed from process start: imports, JVM launch
+        with its launch settings, and the session itself."""
         self.start_session()
-        self.setup_times.append(time.perf_counter() - self.t0)
-        for _ in range(SETUP_REPS - 1):
-            self.setup_times.append(self.start_session())
-        self.mark("sessions")
+        self.session_s = time.perf_counter() - self.t0
+        self.mark("session")
 
     def finish_setup(self, prepared_s: float) -> float:
-        """``setup_s``: the median session set-up plus the workload's one-off
-        preparation (warm-up, artifact builds), measured once."""
+        """``setup_s``: process start to the first session plus the
+        workload's preparation (warm-up, artifact builds), both measured
+        once."""
         self.mark("prepared")
-        return median(self.setup_times) + prepared_s
+        return self.session_s + prepared_s
 
     # -- tracing ---------------------------------------------------------------
     def group(self, name: str) -> "JobGroup":
@@ -236,12 +232,14 @@ def progress_end_ms(p: dict) -> float:
 
 class ProgressLog:
     """Collects every ``QueryProgressEvent`` through a listener the benchmark
-    registers. In a traced run it also writes one JSON line per batch."""
+    registers. While tracing hooks are on it also keeps one record per batch
+    (durations, state operators, sink); ``run.py`` prints them to standard
+    error, one JSON line each, when the run ends."""
 
-    def __init__(self, run: Run, path: str):
+    def __init__(self, run: Run):
         self.run = run
-        self.path = path
         self.by_run: dict[str, list[dict]] = {}
+        self.traced: list[dict] = []
         self.lock = threading.Lock()
 
     def listener(self):
@@ -271,8 +269,7 @@ class ProgressLog:
                 rec = {k: p.get(k) for k in ("name", "runId", "batchId", "timestamp",
                                             "numInputRows", "durationMs", "stateOperators")}
                 rec["sink"] = p.get("sink", {}).get("description")
-                with open(self.path, "a") as f:
-                    f.write(json.dumps(rec) + "\n")
+                self.traced.append(rec)
 
     def batches(self, query, timeout: float = 20.0) -> list[dict]:
         """Progress of every batch of a stopped query, waiting for the

@@ -77,7 +77,7 @@ def main() -> int:
         metrics_spec = b["per_layer"] if args.trace else b["end_to_end"]
         if args.trace:
             values = _trace_layers(run, out)
-            values["session.start_s"] = run.setup_times[0]
+            values["session.start_s"] = run.session_s
             values["check.failed_share"] = out["failed"] / out["attempted"]
         else:
             values = out["e2e"]
@@ -91,7 +91,9 @@ def main() -> int:
                for m in metrics_spec}
     result = {"correct": out["failed"] == 0, "attempted": int(out["attempted"]),
               "failed": int(out["failed"]), "metrics": metrics}
-    print(json.dumps({"marks": run.marks, "setup_times": run.setup_times, "e2e": out["e2e"],
+    for rec in run.progress.traced:
+        print(json.dumps({"batch": rec}), file=sys.stderr)
+    print(json.dumps({"marks": run.marks, "session_s": run.session_s, "e2e": out["e2e"],
                       "layers": out["layers"]}), file=sys.stderr)
     print(json.dumps(result))
     return 0

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import shlex
 import shutil
 import statistics
 import subprocess
@@ -82,6 +83,12 @@ class Run:
         env["SPARK_LOCAL_DIRS"] = self.path("spark-local")
         env.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")  # the inputs are small; keep the JVM small too
         os.makedirs(self.path("spark-local"))
+        # temporary files stay in the run directory too: TMPDIR for Python,
+        # DuckDB and child processes, java.io.tmpdir for the JVM (Spark puts
+        # its artifact directory and native libraries there); the JVM writes
+        # no perf-data file
+        os.makedirs(self.path("tmp"))
+        env["TMPDIR"] = self.path("tmp")
         # executor-side Python workers import the engine (the keyed_files
         # DataSource pickles by reference), so they need the checkout too
         pp = env.get("PYTHONPATH", "")
@@ -97,7 +104,10 @@ class Run:
                 "spark.eventLog.rolling.enabled=false",
                 f"spark.eventLog.dir=file://{self.path('eventlog')}",
             ]
-        env["PYSPARK_SUBMIT_ARGS"] = " ".join(f"--conf {c}" for c in confs) + " pyspark-shell"
+        java_opts = f"-Djava.io.tmpdir={self.path('tmp')} -XX:-UsePerfData"
+        env["PYSPARK_SUBMIT_ARGS"] = " ".join(
+            [f"--conf {shlex.quote(c)}" for c in confs]
+            + ["--driver-java-options", shlex.quote(java_opts), "pyspark-shell"])
 
     # -- generator -----------------------------------------------------------
     def start_gen(self, mode: str, *args: str) -> None:

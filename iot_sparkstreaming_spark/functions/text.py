@@ -47,13 +47,6 @@ def hash64(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint")
 
 
-def salted_hash64(salt, c: Column) -> Column:
-    """hash64 with an integer salt — one hash function per salt, the
-    minhash family. DuckDB twin:
-    ``('0x' || substr(md5(salt || '|' || s), 1, 8))::BIGINT``."""
-    return hash64(F.concat(F.lit(str(salt)), F.lit("|"), c))
-
-
 def word_shingles(toks: Column, k: int = 3) -> Column:
     """k-word shingles of a token array (empty if < k tokens).
     DuckDB twin:

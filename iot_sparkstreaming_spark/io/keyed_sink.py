@@ -54,6 +54,12 @@ TABLE_FILE = "table.jsonl"
 STAGING_DIR = "_staging"
 
 
+def _json_line(rec: dict) -> str:
+    """The one serialisation of a record: staged lines, table lines
+    and the LWW tie-break rank are all this string."""
+    return json.dumps(rec, default=str, sort_keys=True)
+
+
 class KeyedCommitMessage(WriterCommitMessage):
     def __init__(self, filename: str) -> None:
         self.filename = filename
@@ -67,82 +73,73 @@ class _KeyedWriter(DataSourceWriter):
         self.merge = options.get("merge", "lww")  # "lww" | "sum" (additive)
         self.overwrite = overwrite
 
+    def _fold(self, winners: dict, rec: dict, line: str | None = None) -> None:
+        """Merge one record into ``winners`` (key -> [rec, JSON line
+        or None]) — the one per-key merge both :meth:`write` and
+        :meth:`commit` use. The relation is associative, so staging
+        per-task winners and re-folding them in :meth:`commit` gives
+        the same table as folding every row once.
+
+        * ``merge="sum"``: numeric non-key fields add up (additive
+          partial sums); the rest of the record is the newest one.
+        * LWW: the max-``version`` record wins, and a version tie (or
+          a version-less sink) goes to the lexicographically-last JSON
+          line. The line is computed lazily — only on a tie, and never
+          when the caller already read it — so the common path does
+          one dict lookup + one compare per row."""
+        k = str(rec[self.key])
+        cur = winners.get(k)
+        if cur is None:
+            winners[k] = [rec, line]
+            return
+        if self.merge == "sum":
+            nxt = dict(rec)
+            for fld, v in rec.items():
+                if fld != self.key and isinstance(v, (int, float)):
+                    old = cur[0].get(fld)
+                    if isinstance(old, (int, float)):
+                        nxt[fld] = old + v
+            winners[k] = [nxt, None]
+            return
+        if self.version is not None:
+            a, b = rec[self.version], cur[0][self.version]
+            if a != b:
+                if a > b:
+                    winners[k] = [rec, line]
+                return
+        if line is None:
+            line = _json_line(rec)
+        if cur[1] is None:
+            cur[1] = _json_line(cur[0])
+        if line >= cur[1]:
+            winners[k] = [rec, line]
+
     # -- executor side ----------------------------------------------------
     def write(self, iterator: Iterator[Row]) -> KeyedCommitMessage:
-        """Stage the task's rows PRE-AGGREGATED per key: the merge
-        relation is associative (LWW max by (version, json) rank;
-        additive partial sums), so each task stages only its per-key
+        """Stage the task's rows PRE-AGGREGATED per key (see
+        :meth:`_fold`): each task stages only its per-key
         winner/partial — O(keys) staged bytes and driver-merge work
         instead of O(rows). At the 100-TB posture this is the
         difference between the driver merging a dimension-sized state
-        and re-parsing every fact row ever written. The LWW tie-break
-        JSON is computed lazily — only when two rows tie on version —
-        so the common path does one dict + one compare per row."""
+        and re-parsing every fact row ever written."""
         staging = os.path.join(self.path, STAGING_DIR)
         os.makedirs(staging, exist_ok=True)
         name = f"part-{uuid.uuid4().hex}.jsonl"
-        full = os.path.join(staging, name)
-
-        def dumps(rec: dict) -> str:
-            return json.dumps(rec, default=str, sort_keys=True)
-
-        # winners: key -> [rec, cached_json_or_None]
         winners: dict[str, list] = {}
-        if self.merge == "sum":
-            for row in iterator:
-                rec = row.asDict()
-                k = str(rec[self.key])
-                cur = winners.get(k)
-                if cur is None:
-                    winners[k] = [rec, None]
-                    continue
-                nxt = dict(rec)
-                for fld, v in rec.items():
-                    if fld != self.key and isinstance(v, (int, float)):
-                        old = cur[0].get(fld)
-                        if isinstance(old, (int, float)):
-                            nxt[fld] = old + v
-                cur[0] = nxt
-        else:
-            for row in iterator:
-                rec = row.asDict()
-                k = str(rec[self.key])
-                cur = winners.get(k)
-                if cur is None:
-                    winners[k] = [rec, None]
-                    continue
-                if self.version is not None:
-                    a, b = rec[self.version], cur[0][self.version]
-                    if a > b:
-                        winners[k] = [rec, None]
-                        continue
-                    if a < b:
-                        continue
-                # version tie (or version-less): lexicographically
-                # last JSON wins — identical to commit()'s _rank
-                line = dumps(rec)
-                if cur[1] is None:
-                    cur[1] = dumps(cur[0])
-                if line >= cur[1]:
-                    winners[k] = [rec, line]
-        with open(full, "w") as f:
-            for entry in winners.values():
-                f.write((entry[1] or dumps(entry[0])) + "\n")
+        for row in iterator:
+            self._fold(winners, row.asDict())
+        with open(os.path.join(staging, name), "w") as f:
+            for rec, line in winners.values():
+                f.write((line or _json_line(rec)) + "\n")
         return KeyedCommitMessage(name)
 
     # -- driver side -------------------------------------------------------
-    def _rank(self, rec: dict) -> tuple:
-        line = json.dumps(rec, default=str, sort_keys=True)
-        if self.version is not None:
-            return (rec[self.version], line)
-        return (line,)
-
     def commit(
         self, messages: list[KeyedCommitMessage], batch_id: int | None = None
     ) -> None:
         staging = os.path.join(self.path, STAGING_DIR)
         table = os.path.join(self.path, TABLE_FILE)
-        state: dict = {}
+        state: dict[str, list] = {}
         last_batch = None
         if os.path.exists(table):
             with open(table) as f:
@@ -152,7 +149,7 @@ class _KeyedWriter(DataSourceWriter):
                         last_batch = rec["__meta__"].get("last_batch")
                         continue
                     if not self.overwrite:
-                        state[str(rec[self.key])] = rec
+                        state[str(rec[self.key])] = [rec, line.rstrip("\n")]
         # exactly-once epoch dedup: a REPLAYED micro-batch (engine
         # restart re-runs the last batch whose sink commit it cannot
         # prove) is skipped entirely — without this, merge="sum" would
@@ -165,27 +162,16 @@ class _KeyedWriter(DataSourceWriter):
         for name in sorted(committed):
             with open(os.path.join(staging, name)) as f:
                 for line in f:
-                    rec = json.loads(line)
-                    k = str(rec[self.key])
-                    if k not in state:
-                        state[k] = rec
-                    elif self.merge == "sum":
-                        cur = state[k]
-                        nxt = dict(rec)
-                        for fld, v in rec.items():
-                            if fld != self.key and isinstance(v, (int, float)):
-                                old = cur.get(fld)
-                                if isinstance(old, (int, float)):
-                                    nxt[fld] = old + v
-                        state[k] = nxt
-                    elif self._rank(rec) >= self._rank(state[k]):
-                        state[k] = rec
+                    # every line was written by _json_line, so the line
+                    # read IS the record's LWW tie-break rank
+                    self._fold(state, json.loads(line), line.rstrip("\n"))
         tmp = table + ".tmp"
         with open(tmp, "w") as f:
             if batch_id is not None:
                 f.write(json.dumps({"__meta__": {"last_batch": batch_id}}) + "\n")
             for k in sorted(state):
-                f.write(json.dumps(state[k], default=str, sort_keys=True) + "\n")
+                rec, line = state[k]
+                f.write((line or _json_line(rec)) + "\n")
         os.replace(tmp, table)  # atomic publish: rows + epoch, one rename
         # drop EVERYTHING staged — committed files are merged, orphans
         # (retried tasks that never reported a commit message) are dead

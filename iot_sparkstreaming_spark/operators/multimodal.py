@@ -6,14 +6,17 @@ image/audio/video are **opaque ``binary`` columns** with a typed
 ``meta`` struct; decode / feature-extract / resize / frame-sample run
 as ``mapInPandas`` over Arrow batches — the only Python-boundary
 operators in the engine, placed where built-ins genuinely cannot go
-(real codecs). Two modalities have REAL stdlib codecs (no third-party
-libraries needed): PCM16 WAV audio via ``wave`` and uncompressed
-24-bit BMP images via ``struct`` — both run full
-encode→binary→decode→features round-trips, oracle-checked against
-closed-form signal/pixel definitions. Video decode remains stubbed
-(``decode_asset`` raises ``NotImplementedError``; the Spark plumbing
-— schema, Arrow batch shape, partitioning, UDF signature — is real
-and tested).
+(real codecs). Every modality has REAL stdlib codecs (no third-party
+libraries needed): PCM16 WAV audio, BMP / PNG / GIF images and
+YUV4MPEG2 video, plus TAR and ZIP document shards — each runs a full
+encode→binary→decode→features round-trip, oracle-checked against
+closed-form signal/pixel definitions.
+
+Each stage has one Spark-side implementation and takes the codec as
+its only per-format input: :func:`encode_assets` (``synthesize_*``),
+:func:`decode_map` (``decode_*`` plus a row builder),
+:func:`pack_shards` (``pack_*``) and :func:`shard_members`
+(``walk_*``).
 
 Scale posture: payload bytes never shuffle for metadata-only queries
 (column pruning drops ``payload`` at the parquet scan); feature
@@ -105,6 +108,63 @@ def extract_features(assets: DataFrame) -> DataFrame:
     )
 
 
+#: schema of the encoder output: one real codec payload per asset
+ASSETS_SCHEMA = T.StructType(
+    [
+        T.StructField("asset_id", T.LongType()),
+        T.StructField("payload", T.BinaryType()),
+    ]
+)
+
+
+def encode_assets(docs: DataFrame, modality: str, synth) -> DataFrame:
+    """Asset table of ``modality`` with REAL codec payloads: one
+    ``synth(doc_id)`` file per document that
+    :func:`assets_from_documents` assigns to ``modality`` (the same
+    round-robin over :data:`MODALITIES`), encoded in a map-only Arrow
+    pass. ``synth`` is one of the by-value ``synthesize_*`` codecs."""
+    import pandas as pd  # noqa: F811
+
+    residue = MODALITIES.index(modality)
+
+    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "asset_id": pdf["asset_id"].astype("int64"),
+                    "payload": [synth(int(i)) for i in pdf["asset_id"]],
+                }
+            )
+
+    flat = docs.filter(col("doc_id") % len(MODALITIES) == residue).select(
+        col("doc_id").alias("asset_id")
+    )
+    return flat.mapInPandas(gen, schema=ASSETS_SCHEMA)
+
+
+def decode_map(assets: DataFrame, decode, schema: T.StructType, to_rows) -> DataFrame:
+    """The decode stage every codec shares: one map-only Arrow pass
+    that decodes each payload with ``decode`` (a by-value
+    ``decode_*`` codec) and turns it into integer output rows with
+    ``to_rows(asset_id, decoded)``, a list of dicts keyed by the
+    fields of ``schema``. Payload bytes die inside the batch and are
+    never shuffled."""
+    import pandas as pd  # noqa: F811
+
+    columns = schema.fieldNames()
+
+    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for pdf in batches:
+            rows = [
+                row
+                for aid, payload in zip(pdf["asset_id"], pdf["payload"])
+                for row in to_rows(int(aid), decode(bytes(payload)))
+            ]
+            yield pd.DataFrame(rows, columns=columns).astype("int64")
+
+    return assets.select("asset_id", "payload").mapInPandas(gen, schema=schema)
+
+
 #: nominal sample rate for the synthetic audio fixture
 WAV_SAMPLE_RATE = 8000
 
@@ -175,33 +235,6 @@ synthesize_wav = _make_wav_synth()
 decode_wav = _make_wav_decode()
 
 
-def decode_asset(payload: bytes, modality: str):
-    """Codec dispatch. ``audio`` (PCM16 WAV via stdlib ``wave``) and
-    ``image`` (uncompressed 24-bit BMP via stdlib ``struct``, defined
-    below) are REAL decode paths, so both run the full
-    encode→binary→decode→features round-trip in this container;
-    non-BMP images fall through to PIL when it exists. ``video``
-    remains a stub (no pure-stdlib container parser is worth faking):
-    its Spark-side plumbing is exercised by ``extract_features`` and
-    ``frame_sample_stub``."""
-    if modality == "audio":
-        return decode_wav(payload)
-    if modality == "image":
-        if payload[:2] == b"BM":
-            return decode_bmp(payload)
-        try:
-            from PIL import Image  # type: ignore
-            import io
-
-            return Image.open(io.BytesIO(payload))
-        except ImportError:
-            pass
-    raise NotImplementedError(
-        f"decode for modality={modality!r} requires codec libraries "
-        "not present in this environment"
-    )
-
-
 #: schema of the decoded-audio feature output (stable contract)
 AUDIO_FEATURES_SCHEMA = T.StructType(
     [
@@ -215,152 +248,25 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def wav_audio_assets(docs: DataFrame) -> DataFrame:
-    """Audio-modality asset table with REAL WAV payloads: one genuine
-    RIFF/WAVE file per audio document (same doc_id % 3 == 1 modality
-    assignment as :func:`assets_from_documents`), encoded in an
-    Arrow-batched map-only pass."""
-    import pandas as pd  # noqa: F811
-
-    out_schema = T.StructType(
-        [
-            T.StructField("asset_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    synth = synthesize_wav  # '<locals>' qualname → pickled by value
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "payload": pdf["asset_id"].map(lambda a: synth(int(a))),
-                }
-            )
-
-    flat = docs.filter(col("doc_id") % 3 == 1).select(col("doc_id").alias("asset_id"))
-    return flat.mapInPandas(gen, schema=out_schema)
-
-
 def audio_features(assets: DataFrame) -> DataFrame:
     """Decode real WAV payloads (stdlib ``wave`` via
-    :func:`decode_asset`) and emit integer sample statistics — the
-    working instance of the decode→feature-extract contract the
-    image/video stubs document. Map-only; payload bytes are consumed
-    inside the batch and never shuffled."""
-    import pandas as pd  # noqa: F811
+    :func:`decode_wav`) and emit integer sample statistics. Map-only;
+    payload bytes are consumed inside the batch and never shuffled."""
 
-    decode = decode_wav  # '<locals>' qualname → pickled by value
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                d = decode(bytes(payload))
-                samples = d["samples"]
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "sample_rate": d["sample_rate"],
-                        "n_channels": d["n_channels"],
-                        "n_frames": d["n_frames"],
-                        "sum_amp": int(sum(samples)),
-                        "peak_abs": int(max(abs(s) for s in samples)),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields],
-            ).astype("int64")
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        gen, schema=AUDIO_FEATURES_SCHEMA
-    )
-
-
-def thumbnail_stub(assets: DataFrame, max_px: int = 64) -> DataFrame:
-    """Resize/frame-sample plumbing with a deterministic fake decode:
-    produces the (asset_id, thumb_w, thumb_h) the real resize would,
-    scaled from metadata — the full mapInPandas round-trip without
-    codecs. Replace the body's arithmetic with ``decode_asset`` +
-    real resampling when codecs exist."""
-    import pandas as pd  # noqa: F811
-
-    out_schema = T.StructType(
-        [
-            T.StructField("asset_id", T.LongType()),
-            T.StructField("thumb_w", T.IntegerType()),
-            T.StructField("thumb_h", T.IntegerType()),
+    def to_rows(aid: int, d: dict) -> list:
+        samples = d["samples"]
+        return [
+            {
+                "asset_id": aid,
+                "sample_rate": d["sample_rate"],
+                "n_channels": d["n_channels"],
+                "n_frames": d["n_frames"],
+                "sum_amp": int(sum(samples)),
+                "peak_abs": int(max(abs(s) for s in samples)),
+            }
         ]
-    )
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            w = pdf["width"].clip(lower=1)
-            h = pdf["height"].clip(lower=1)
-            scale = (max_px / pd.concat([w, h], axis=1).max(axis=1)).clip(upper=1.0)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "thumb_w": (w * scale).astype("int32").clip(lower=1),
-                    "thumb_h": (h * scale).astype("int32").clip(lower=1),
-                }
-            )
-
-    flat = assets.select(
-        "asset_id", col("meta.width").alias("width"), col("meta.height").alias("height")
-    )
-    return flat.mapInPandas(gen, schema=out_schema)
-
-
-def frame_sample_stub(
-    assets: DataFrame, every_n: int = 10, max_frames: int = 8
-) -> DataFrame:
-    """Frame-sampling plumbing for video assets: uniform every-Nth
-    frame, capped at ``max_frames`` per asset — one output row per
-    sampled frame index, the exploded shape a frame decoder feeds to a
-    vision encoder. Deterministic from metadata alone (``n_frames``
-    derived from duration_ms at a nominal 25 fps); the real
-    implementation replaces the index arithmetic's downstream with
-    ``decode_asset`` + per-frame extraction, keeping this exact
-    partitioning and output contract.
-
-    Scale: map-only, payloads untouched (column pruning drops them at
-    the scan); output rows ≤ max_frames × assets."""
-    import pandas as pd  # noqa: F811
-
-    out_schema = T.StructType(
-        [
-            T.StructField("asset_id", T.LongType()),
-            T.StructField("frame_index", T.IntegerType()),
-            T.StructField("sample_seq", T.IntegerType()),
-        ]
-    )
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            n_frames = (pdf["duration_ms"].fillna(0).clip(lower=0) * 25 // 1000).astype(
-                "int64"
-            )
-            out = []
-            for aid, nf in zip(pdf["asset_id"], n_frames):
-                idxs = list(range(0, int(nf), every_n))[:max_frames]
-                out.extend(
-                    {"asset_id": aid, "frame_index": ix, "sample_seq": seq}
-                    for seq, ix in enumerate(idxs)
-                )
-            yield pd.DataFrame(
-                out, columns=["asset_id", "frame_index", "sample_seq"]
-            ).astype(
-                {"asset_id": "int64", "frame_index": "int32", "sample_seq": "int32"}
-            )
-
-    flat = assets.filter(col("modality") == "video").select(
-        "asset_id", col("meta.duration_ms").alias("duration_ms")
-    )
-    return flat.mapInPandas(gen, schema=out_schema)
+    return decode_map(assets, decode_wav, AUDIO_FEATURES_SCHEMA, to_rows)
 
 
 # The BMP codec helpers use the same by-value factory pattern as the
@@ -448,66 +354,26 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def bmp_image_assets(docs: DataFrame) -> DataFrame:
-    """Image-modality asset table with REAL BMP payloads (same
-    doc_id % 3 == 0 modality assignment as
-    :func:`assets_from_documents`), encoded in a map-only Arrow
-    pass."""
-    import pandas as pd  # noqa: F811
+def image_features(assets: DataFrame, decode) -> DataFrame:
+    """Decode real image payloads with ``decode`` (:func:`decode_bmp`
+    or :func:`decode_png`; both return top-down pixel tuples) and
+    emit integer pixel statistics. Map-only; payloads die inside the
+    batch."""
 
-    out_schema = T.StructType(
-        [
-            T.StructField("asset_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
+    def to_rows(aid: int, d: dict) -> list:
+        flat = [v for row in d["pixels"] for px in row for v in px]
+        return [
+            {
+                "asset_id": aid,
+                "width": d["width"],
+                "height": d["height"],
+                "n_pixels": d["width"] * d["height"],
+                "sum_rgb": int(sum(flat)),
+                "max_channel": int(max(flat)),
+            }
         ]
-    )
 
-    synth = synthesize_bmp  # '<locals>' qualname → pickled by value
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "payload": pdf["asset_id"].map(lambda a: synth(int(a))),
-                }
-            )
-
-    flat = docs.filter(col("doc_id") % 3 == 0).select(col("doc_id").alias("asset_id"))
-    return flat.mapInPandas(gen, schema=out_schema)
-
-
-def image_features(assets: DataFrame) -> DataFrame:
-    """Decode real BMP payloads and emit integer pixel statistics —
-    the image twin of :func:`audio_features`. Map-only; payloads die
-    inside the batch."""
-    import pandas as pd  # noqa: F811
-
-    decode = decode_bmp  # '<locals>' qualname → pickled by value
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                d = decode(bytes(payload))
-                flat = [v for row in d["pixels"] for px in row for v in px]
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "width": d["width"],
-                        "height": d["height"],
-                        "n_pixels": d["width"] * d["height"],
-                        "sum_rgb": int(sum(flat)),
-                        "max_channel": int(max(flat)),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields]
-            ).astype("int64")
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        gen, schema=IMAGE_FEATURES_SCHEMA
-    )
+    return decode_map(assets, decode, IMAGE_FEATURES_SCHEMA, to_rows)
 
 
 #: schema of the real-resize thumbnail feature output
@@ -524,52 +390,45 @@ THUMBNAIL_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def image_thumbnails(assets: DataFrame, tw: int = 2, th: int = 2) -> DataFrame:
-    """REAL image resize (no stub): decode the BMP payload, then
-    nearest-neighbor downsample to ``tw``×``th`` — target pixel
-    (xt, yt) samples source pixel ((xt*w)//tw, (yt*h)//th), the
+#: thumbnail size of :func:`image_thumbnails` (the oracle hard-codes 2×2)
+THUMB_W = 2
+THUMB_H = 2
+
+
+def image_thumbnails(assets: DataFrame) -> DataFrame:
+    """REAL image resize: decode the BMP payload, then
+    nearest-neighbor downsample to ``THUMB_W``×``THUMB_H`` — target
+    pixel (xt, yt) samples source pixel ((xt*w)//tw, (yt*h)//th), the
     standard floor-mapping NN kernel — and emit integer statistics of
-    the RESIZED pixels. Unlike :func:`thumbnail_stub` (which only
-    plans dimensions for codec-less modalities), this path touches
-    every sampled pixel of a genuinely decoded image, so the oracle's
-    closed-form recomputation proves decode + index mapping are
-    exact. Map-only Arrow pass; the full-resolution pixels die inside
-    the batch — at 100 TB only the ``tw*th*3``-byte thumbnails ever
-    reach a shuffle or sink."""
-    import pandas as pd  # noqa: F811
+    the RESIZED pixels. This path touches every sampled pixel of a
+    genuinely decoded image, so the oracle's closed-form
+    recomputation proves decode + index mapping are exact. Map-only
+    Arrow pass; the full-resolution pixels die inside the batch — at
+    100 TB only the ``tw*th*3``-byte thumbnails ever reach a shuffle
+    or sink."""
+    tw, th = THUMB_W, THUMB_H
 
-    decode = decode_bmp  # '<locals>' qualname → pickled by value
+    def to_rows(aid: int, d: dict) -> list:
+        w, h, px = d["width"], d["height"], d["pixels"]
+        sampled = [
+            v
+            for yt in range(th)
+            for xt in range(tw)
+            for v in px[(yt * h) // th][(xt * w) // tw]
+        ]
+        return [
+            {
+                "asset_id": aid,
+                "width": w,
+                "height": h,
+                "thumb_w": tw,
+                "thumb_h": th,
+                "thumb_sum_rgb": int(sum(sampled)),
+                "thumb_max_channel": int(max(sampled)),
+            }
+        ]
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                d = decode(bytes(payload))
-                w, h, px = d["width"], d["height"], d["pixels"]
-                sampled = [
-                    v
-                    for yt in range(th)
-                    for xt in range(tw)
-                    for v in px[(yt * h) // th][(xt * w) // tw]
-                ]
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "width": w,
-                        "height": h,
-                        "thumb_w": tw,
-                        "thumb_h": th,
-                        "thumb_sum_rgb": int(sum(sampled)),
-                        "thumb_max_channel": int(max(sampled)),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in THUMBNAIL_FEATURES_SCHEMA.fields]
-            ).astype("int64")
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        gen, schema=THUMBNAIL_FEATURES_SCHEMA
-    )
+    return decode_map(assets, decode_bmp, THUMBNAIL_FEATURES_SCHEMA, to_rows)
 
 
 def assets_from_binary_files(spark, path: str, glob: str = "*.bmp") -> DataFrame:
@@ -722,69 +581,6 @@ synthesize_png = _make_png_synth()
 decode_png = _make_png_decode()
 
 
-def png_image_assets(docs: DataFrame) -> DataFrame:
-    """Image-modality asset table with REAL PNG payloads (same
-    doc_id % 3 == 0 assignment), encoded in a map-only Arrow pass."""
-    import pandas as pd  # noqa: F811
-
-    out_schema = T.StructType(
-        [
-            T.StructField("asset_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    synth = synthesize_png  # '<locals>' qualname → pickled by value
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"].astype("int64"),
-                    "payload": [synth(int(i)) for i in pdf["doc_id"]],
-                },
-                columns=["asset_id", "payload"],
-            )
-
-    return (
-        docs.filter(docs.doc_id % 3 == 0)
-        .select("doc_id")
-        .mapInPandas(gen, schema=out_schema)
-    )
-
-
-def png_image_features(assets: DataFrame) -> DataFrame:
-    """Decode real PNG payloads (CRC walk + inflate + unfilter) into
-    the same integer pixel statistics as :func:`image_features`."""
-    import pandas as pd  # noqa: F811
-
-    decode = decode_png  # '<locals>' qualname → pickled by value
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                d = decode(bytes(payload))
-                flat = [v for row in d["pixels"] for px in row for v in px]
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "width": d["width"],
-                        "height": d["height"],
-                        "n_pixels": d["width"] * d["height"],
-                        "sum_rgb": int(sum(flat)),
-                        "max_channel": int(max(flat)),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields]
-            ).astype("int64")
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        gen, schema=IMAGE_FEATURES_SCHEMA
-    )
-
-
 # The y4m (YUV4MPEG2) codec pair: the THIRD modality goes real —
 # a genuine public video container (mpv/ffmpeg-compatible), raw
 # YUV420 planes, decodable with the stdlib alone. Same by-value
@@ -891,71 +687,33 @@ VIDEO_FRAME_SCHEMA = T.StructType(
 )
 
 
-def y4m_video_assets(docs: DataFrame) -> DataFrame:
-    """Video-modality asset table with REAL y4m payloads
-    (doc_id % 3 == 2 — the modality assignment
-    :func:`assets_from_documents` gives video), encoded map-only."""
-    import pandas as pd  # noqa: F811
+#: every Y4M_FRAME_STEP-th frame is sampled (the oracle hard-codes 2)
+Y4M_FRAME_STEP = 2
 
-    out_schema = T.StructType(
-        [
-            T.StructField("asset_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
 
-    synth = synthesize_y4m  # '<locals>' qualname → pickled by value
+def y4m_frame_features(assets: DataFrame) -> DataFrame:
+    """REAL frame sampling + decode: every ``Y4M_FRAME_STEP``-th frame
+    of each decoded y4m stream reduces to integer plane statistics,
+    one row per sampled frame. Map-only; payloads die in-batch."""
+    step = Y4M_FRAME_STEP
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
+    def to_rows(aid: int, d: dict) -> list:
+        rows = []
+        for fi in range(0, d["n_frames"], step):
+            fr = d["frames"][fi]
+            rows.append(
                 {
-                    "asset_id": pdf["doc_id"].astype("int64"),
-                    "payload": [synth(int(i)) for i in pdf["doc_id"]],
-                },
-                columns=["asset_id", "payload"],
+                    "asset_id": aid,
+                    "frame_index": fi,
+                    "width": d["width"],
+                    "height": d["height"],
+                    "sum_y": sum(fr["y"]),
+                    "sum_uv": sum(fr["u"]) + sum(fr["v"]),
+                }
             )
+        return rows
 
-    return (
-        docs.filter(docs.doc_id % 3 == 2)
-        .select("doc_id")
-        .mapInPandas(gen, schema=out_schema)
-    )
-
-
-def y4m_frame_features(assets: DataFrame, every_n: int = 2) -> DataFrame:
-    """REAL frame sampling + decode: every ``every_n``-th frame of
-    each decoded y4m stream reduces to integer plane statistics — the
-    working replacement for :func:`frame_sample_stub`'s
-    metadata-only arithmetic. Map-only; payloads die in-batch."""
-    import pandas as pd  # noqa: F811
-
-    decode = decode_y4m  # '<locals>' qualname → pickled by value
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                d = decode(bytes(payload))
-                for fi in range(0, d["n_frames"], every_n):
-                    fr = d["frames"][fi]
-                    rows.append(
-                        {
-                            "asset_id": int(aid),
-                            "frame_index": fi,
-                            "width": d["width"],
-                            "height": d["height"],
-                            "sum_y": sum(fr["y"]),
-                            "sum_uv": sum(fr["u"]) + sum(fr["v"]),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_FRAME_SCHEMA.fields]
-            ).astype("int64")
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        gen, schema=VIDEO_FRAME_SCHEMA
-    )
+    return decode_map(assets, decode_y4m, VIDEO_FRAME_SCHEMA, to_rows)
 
 
 # The GIF87a codec pair: the FIFTH real stdlib codec and the second
@@ -1168,38 +926,6 @@ synthesize_gif = _make_gif_synth()
 decode_gif = _make_gif_decode()
 
 
-def gif_image_assets(docs: DataFrame) -> DataFrame:
-    """Image-modality asset table with REAL GIF87a payloads (same
-    doc_id % 3 == 0 assignment as the other image codecs), encoded in
-    a map-only Arrow pass."""
-    import pandas as pd  # noqa: F811
-
-    out_schema = T.StructType(
-        [
-            T.StructField("asset_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    synth = synthesize_gif  # '<locals>' qualname → pickled by value
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"].astype("int64"),
-                    "payload": [synth(int(i)) for i in pdf["doc_id"]],
-                },
-                columns=["asset_id", "payload"],
-            )
-
-    return (
-        docs.filter(docs.doc_id % 3 == 0)
-        .select("doc_id")
-        .mapInPandas(gen, schema=out_schema)
-    )
-
-
 GIF_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("asset_id", T.LongType()),
@@ -1217,34 +943,22 @@ def gif_image_features(assets: DataFrame) -> DataFrame:
     """Decode real GIF payloads (LZW + palette) into integer pixel
     statistics, plus the palette-usage count a palette format makes
     natural."""
-    import pandas as pd  # noqa: F811
 
-    decode = decode_gif  # '<locals>' qualname → pickled by value
+    def to_rows(aid: int, d: dict) -> list:
+        flat = [v for row in d["pixels"] for px in row for v in px]
+        return [
+            {
+                "asset_id": aid,
+                "width": d["width"],
+                "height": d["height"],
+                "n_pixels": d["width"] * d["height"],
+                "sum_rgb": int(sum(flat)),
+                "max_channel": int(max(flat)),
+                "distinct_colors": len(set(d["indices"])),
+            }
+        ]
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                d = decode(bytes(payload))
-                flat = [v for row in d["pixels"] for px in row for v in px]
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "width": d["width"],
-                        "height": d["height"],
-                        "n_pixels": d["width"] * d["height"],
-                        "sum_rgb": int(sum(flat)),
-                        "max_channel": int(max(flat)),
-                        "distinct_colors": len(set(d["indices"])),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in GIF_FEATURES_SCHEMA.fields]
-            ).astype("int64")
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        gen, schema=GIF_FEATURES_SCHEMA
-    )
+    return decode_map(assets, decode_gif, GIF_FEATURES_SCHEMA, to_rows)
 
 
 # The USTAR shard pair: pack documents into deterministic POSIX-ustar
@@ -1253,9 +967,6 @@ def gif_image_features(assets: DataFrame) -> DataFrame:
 # Stdlib tarfile with pinned metadata (mtime 0, uid/gid 0, empty
 # uname/gname, USTAR_FORMAT) so identical inputs yield byte-identical
 # shards on every engine and every rerun.
-TAR_SHARD_MOD = 50
-
-
 def _make_tar_pack():
     def pack_tar(members) -> bytes:
         """members: iterable of (doc_id, text) → ustar archive bytes,
@@ -1303,96 +1014,9 @@ pack_tar = _make_tar_pack()
 walk_tar = _make_tar_walk()
 
 
-def tar_shards(docs: DataFrame, shard_mod: int = TAR_SHARD_MOD) -> DataFrame:
-    """(shard_id, payload, n_members): documents packed into
-    ``shard_mod`` deterministic ustar shards (member order = doc_id).
-    One Arrow pass over pre-grouped member arrays — the collect_list
-    per shard bounds executor state at corpus_bytes/shard_mod."""
-    import pandas as pd  # noqa: F811
-
-    packer = pack_tar  # '<locals>' qualname → pickled by value
-
-    grouped = (
-        docs.select(
-            (col("doc_id") % shard_mod).alias("shard_id"),
-            F.struct(col("doc_id"), col("text")).alias("m"),
-        )
-        .groupBy("shard_id")
-        .agg(F.array_sort(F.collect_list("m")).alias("members"))
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("shard_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("n_members", T.LongType()),
-        ]
-    )
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for sid, members in zip(pdf["shard_id"], pdf["members"]):
-                pairs = [(m["doc_id"], m["text"]) for m in members]
-                rows.append(
-                    {
-                        "shard_id": int(sid),
-                        "payload": packer(pairs),
-                        "n_members": len(pairs),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["shard_id", "payload", "n_members"]
-            )
-
-    return grouped.mapInPandas(gen, schema=out_schema)
-
-
-def tar_shard_members(shards: DataFrame) -> DataFrame:
-    """(doc_id, shard_id, n_bytes, text): walk every shard archive
-    back to its members — the ingest half of the WebDataset pattern.
-    Map-only Arrow pass; payloads die in-batch."""
-    import pandas as pd  # noqa: F811
-
-    walker = walk_tar  # '<locals>' qualname → pickled by value
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("shard_id", T.LongType()),
-            T.StructField("n_bytes", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                for doc_id, n_bytes, text in walker(bytes(payload)):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "shard_id": int(sid),
-                            "n_bytes": n_bytes,
-                            "text": text,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "shard_id", "n_bytes", "text"]
-            )
-
-    return shards.select("shard_id", "payload").mapInPandas(
-        gen, schema=out_schema
-    )
-
-
 # ---------------------------------------------------------------------------
 # ZIP shards: DEFLATE members behind a hand-walked central directory
 # ---------------------------------------------------------------------------
-
-ZIP_SHARD_MOD = 50
-
 
 def _make_zip_pack():
     def pack_zip(members) -> bytes:
@@ -1494,18 +1118,48 @@ pack_zip = _make_zip_pack()
 walk_zip = _make_zip_walk()
 
 
-def zip_shards(docs: DataFrame, shard_mod: int = ZIP_SHARD_MOD) -> DataFrame:
-    """(shard_id, payload, n_members): documents packed into
-    ``shard_mod`` deterministic DEFLATE ZIP shards (member order =
-    doc_id). Same bounded collect_list + one-Arrow-pass shape as
-    ``tar_shards``."""
-    import pandas as pd  # noqa: F811
+# ---------------------------------------------------------------------------
+# The shard stages: one packer and one walker, with the archive codec as
+# their only per-format input
+# ---------------------------------------------------------------------------
 
-    packer = pack_zip
+#: documents are packed into SHARD_MOD shards by doc_id % SHARD_MOD
+#: (the oracles hard-code 50)
+SHARD_MOD = 50
+
+#: member rows of :func:`shard_members` with :func:`walk_tar`
+TAR_MEMBERS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("shard_id", T.LongType()),
+        T.StructField("n_bytes", T.LongType()),
+        T.StructField("text", T.StringType()),
+    ]
+)
+
+#: member rows of :func:`shard_members` with :func:`walk_zip`
+ZIP_MEMBERS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("shard_id", T.LongType()),
+        T.StructField("method", T.LongType()),
+        T.StructField("n_bytes", T.LongType()),
+        T.StructField("text", T.StringType()),
+    ]
+)
+
+
+def pack_shards(docs: DataFrame, pack) -> DataFrame:
+    """(shard_id, payload, n_members): documents packed by ``pack``
+    (:func:`pack_tar` or :func:`pack_zip`) into ``SHARD_MOD``
+    deterministic archives, member order = doc_id. One Arrow pass
+    over pre-grouped member arrays — the collect_list per shard
+    bounds executor state at corpus_bytes/SHARD_MOD."""
+    import pandas as pd  # noqa: F811
 
     grouped = (
         docs.select(
-            (col("doc_id") % shard_mod).alias("shard_id"),
+            (col("doc_id") % SHARD_MOD).alias("shard_id"),
             F.struct(col("doc_id"), col("text")).alias("m"),
         )
         .groupBy("shard_id")
@@ -1528,7 +1182,7 @@ def zip_shards(docs: DataFrame, shard_mod: int = ZIP_SHARD_MOD) -> DataFrame:
                 rows.append(
                     {
                         "shard_id": int(sid),
-                        "payload": packer(pairs),
+                        "payload": pack(pairs),
                         "n_members": len(pairs),
                     }
                 )
@@ -1537,41 +1191,24 @@ def zip_shards(docs: DataFrame, shard_mod: int = ZIP_SHARD_MOD) -> DataFrame:
     return grouped.mapInPandas(gen, schema=out_schema)
 
 
-def zip_shard_members(shards: DataFrame) -> DataFrame:
-    """(doc_id, shard_id, method, n_bytes, text): hand-walk every ZIP
-    shard back to its members with per-member CRC verification.
+def shard_members(shards: DataFrame, walk, schema: T.StructType) -> DataFrame:
+    """Walk every shard archive back to its members with ``walk``
+    (:func:`walk_tar` or :func:`walk_zip`) — the ingest half of the
+    WebDataset pattern. Each member tuple ``(doc_id, *rest)`` becomes
+    the row ``(doc_id, shard_id, *rest)`` of ``schema``
+    (:data:`TAR_MEMBERS_SCHEMA` or :data:`ZIP_MEMBERS_SCHEMA`).
     Map-only Arrow pass; payloads die in-batch."""
     import pandas as pd  # noqa: F811
 
-    walker = walk_zip
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("shard_id", T.LongType()),
-            T.StructField("method", T.LongType()),
-            T.StructField("n_bytes", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
+    columns = schema.fieldNames()
 
     def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                for doc_id, method, n_bytes, text in walker(bytes(payload)):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "shard_id": int(sid),
-                            "method": method,
-                            "n_bytes": n_bytes,
-                            "text": text,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "shard_id", "method", "n_bytes", "text"],
-            )
+            rows = [
+                (doc_id, int(sid), *rest)
+                for sid, payload in zip(pdf["shard_id"], pdf["payload"])
+                for doc_id, *rest in walk(bytes(payload))
+            ]
+            yield pd.DataFrame(rows, columns=columns)
 
-    return shards.mapInPandas(gen, schema=out_schema)
+    return shards.select("shard_id", "payload").mapInPandas(gen, schema=schema)

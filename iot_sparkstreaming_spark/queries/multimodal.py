@@ -15,10 +15,29 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
 from iot_sparkstreaming_spark.operators.multimodal import (
+    TAR_MEMBERS_SCHEMA,
+    ZIP_MEMBERS_SCHEMA,
     assets_from_documents,
     audio_features,
+    decode_bmp,
+    decode_png,
+    encode_assets,
     extract_features,
-    wav_audio_assets,
+    gif_image_features,
+    image_features,
+    image_thumbnails,
+    pack_shards,
+    pack_tar,
+    pack_zip,
+    shard_members,
+    synthesize_bmp,
+    synthesize_gif,
+    synthesize_png,
+    synthesize_wav,
+    synthesize_y4m,
+    walk_tar,
+    walk_zip,
+    y4m_frame_features,
 )
 from iot_sparkstreaming_spark.queries.registry import register
 from iot_sparkstreaming_spark.tables import load_table
@@ -134,7 +153,7 @@ def audio_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds: decode parallelism is the scan's partitioning, features are
     a few ints per asset."""
     docs = load_table(spark, sf_dir, "documents")
-    return audio_features(wav_audio_assets(docs))
+    return audio_features(encode_assets(docs, "audio", synthesize_wav))
 
 
 # Closed-form BMP fixture (operators/multimodal.py synthesize_bmp):
@@ -181,13 +200,8 @@ def image_bmp_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the audio path — two chained map-only
     Arrow passes, no shuffle, payloads never leave the pipeline."""
-    from iot_sparkstreaming_spark.operators.multimodal import (
-        bmp_image_assets,
-        image_features,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    return image_features(bmp_image_assets(docs))
+    return image_features(encode_assets(docs, "image", synthesize_bmp), decode_bmp)
 
 
 # Thumbnail oracle: target pixel (xt, yt) of a tw x th = 2x2 thumb
@@ -230,13 +244,8 @@ def image_bmp_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal quartet with a third genuinely-executed transform
     (operators/multimodal.py image_thumbnails). Map-only like the
     codec paths; only thumbnail-sized data survives the pass."""
-    from iot_sparkstreaming_spark.operators.multimodal import (
-        bmp_image_assets,
-        image_thumbnails,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    return image_thumbnails(bmp_image_assets(docs))
+    return image_thumbnails(encode_assets(docs, "image", synthesize_bmp))
 
 
 IMAGE_PNG_ORACLE = """
@@ -278,13 +287,8 @@ def image_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to the other codec paths — two chained
     map-only Arrow passes, no shuffle, payloads die in-batch.
     """
-    from iot_sparkstreaming_spark.operators.multimodal import (
-        png_image_assets,
-        png_image_features,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    return png_image_features(png_image_assets(docs))
+    return image_features(encode_assets(docs, "image", synthesize_png), decode_png)
 
 
 VIDEO_Y4M_ORACLE = """
@@ -344,20 +348,14 @@ def video_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame to integer plane statistics — checked against the
     closed-form plane definition. With WAV, BMP and PNG this makes
     codec coverage audio + image(×2, one compressed) + video, all
-    stdlib-only; `frame_sample_stub`'s metadata-only arithmetic is
-    superseded by this real decode-and-sample path.
+    stdlib-only.
 
     Scale shape: identical to the other codec paths — two chained
     map-only Arrow passes, no shuffle, payloads die in-batch; output
     is one row per SAMPLED frame (bounded by n_frames/2 per asset).
     """
-    from iot_sparkstreaming_spark.operators.multimodal import (
-        y4m_frame_features,
-        y4m_video_assets,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    return y4m_frame_features(y4m_video_assets(docs)).orderBy(
+    return y4m_frame_features(encode_assets(docs, "video", synthesize_y4m)).orderBy(
         "asset_id", "frame_index"
     )
 
@@ -412,13 +410,8 @@ def image_gif_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to the other codec paths — two chained
     map-only Arrow passes, no shuffle, payloads die in-batch.
     """
-    from iot_sparkstreaming_spark.operators.multimodal import (
-        gif_image_assets,
-        gif_image_features,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    return gif_image_features(gif_image_assets(docs))
+    return gif_image_features(encode_assets(docs, "image", synthesize_gif))
 
 
 TAR_SHARD_ORACLE = """
@@ -448,13 +441,8 @@ def tar_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     object storage and the unpack pass IS the training-job reader;
     shard count scales with corpus size to bound member-list state.
     """
-    from iot_sparkstreaming_spark.operators.multimodal import (
-        tar_shard_members,
-        tar_shards,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return tar_shard_members(tar_shards(docs))
+    return shard_members(pack_shards(docs, pack_tar), walk_tar, TAR_MEMBERS_SCHEMA)
 
 
 ZIP_SHARD_ORACLE = """
@@ -491,10 +479,5 @@ def zip_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     after seeking the central directory, unlike a tar.gz whose gzip
     stream must inflate from byte 0.
     """
-    from iot_sparkstreaming_spark.operators.multimodal import (
-        zip_shard_members,
-        zip_shards,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return zip_shard_members(zip_shards(docs))
+    return shard_members(pack_shards(docs, pack_zip), walk_zip, ZIP_MEMBERS_SCHEMA)

@@ -155,18 +155,19 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     so child cardinality, NULL-FK rows, orphan rows, and orphan keys
     all fold out of the SAME key-sized table — child_rows = Σ n_rows
     (the null group included), null_fk_rows = the null group's count,
-    and orphanhood comes from a LEFT join against the parent key
-    column (unique PK, so the join multiplies nothing and "no match"
-    ≡ the old anti join; broadcast for the small dimensions, shuffle
-    for orders). One child scan, one exchange, one join, one 1-row
-    aggregate per relationship — at 100 TB this halves the corpus
-    scans the audit pays. The 7 one-row reports union into one frame.
+    and orphanhood comes from a LEFT join against the DISTINCT parent
+    keys (key-sized; a duplicated parent PK — exactly the corrupted
+    data this audit exists for — must not multiply child rows, and
+    "no match" ≡ the old anti join; broadcast for the small
+    dimensions, shuffle for orders). One child scan, one exchange,
+    one join, one 1-row aggregate per relationship — at 100 TB this
+    halves the corpus scans the audit pays. The 7 one-row reports union into one frame.
     """
     out: DataFrame | None = None
     small_parents = {"part", "supplier", "customer", "nation", "region"}
     for name, child_t, fk, parent_t, pk in FK_EDGES:
         child = load_table(spark, sf_dir, child_t)
-        parent = load_table(spark, sf_dir, parent_t).select(pk)
+        parent = load_table(spark, sf_dir, parent_t).select(pk).distinct()
         per_key = child.groupBy(fk).agg(F.count("*").alias("n_rows"))
         p = broadcast(parent) if parent_t in small_parents else parent
         annotated = per_key.join(p, per_key[fk] == p[pk], "left")

@@ -52,129 +52,16 @@ def register(name: str, oracle: str | None = None) -> Callable[[SparkQuery], Spa
 # can scramble decorator-side registration order, so load_all re-orders
 # explicitly. The driver's correctness check samples a 50-query prefix
 # of this order, so the prefix is rotated per round to cycle every
-# registered query through external verification:
+# registered query through external verification (the round-by-round
+# history is in git and the CORRECTNESS_r*.json files).
 #
-# * rounds 1-3 led with reference/text/similarity/multimodal/sql/
-#   pipeline/dedup (all green in CORRECTNESS_r02/r03);
-# * round 4 promoted the never-yet-checked tail — TPC-H (24) and
-#   functions (12) — plus the 12 events-consuming queries: 49/50 green
-#   (q12 hash-only, an oracle HUGEINT typing bug, since cast);
-# * round 5's window (16 never-checked + 9 last-red + 8 reference
-#   core + 17 new-in-r5) came back 50/50 green (CORRECTNESS_r05.json),
-#   including the q12 oracle-cast proof;
-# * round 6 rotated in the 34 queries that landed after r5's window
-#   was sized (all came back green), kept the 8 reference-pipeline
-#   queries pinned, and gave the remaining 8 slots to the queries NEW
-#   in round 6 — 50/50 green (CORRECTNESS_r06.json);
-# * round 7 led with the 5 never-externally-checked queries, kept the
-#   8 reference-core queries pinned, re-checked 2 code-changed
-#   queries, re-validated the oldest (round-3) cohort through the new
-#   artifact-store disk tier, and gave 3 slots to the queries new in
-#   round 7 — 50/50 green (CORRECTNESS_r07.json);
-# * round 8 landed ~62 new queries — more than one 50-slot window can
-#   cover. The window takes the first 42 never-externally-checked in
-#   LANDING ORDER (ks_drift_events / rrf_fuse_rankers lead — the two
-#   r7 late arrivals the judge pre-verified; image_gif_features third
-#   — judge item #1) plus the 8 pinned reference queries. The 20
-#   newest-landed r8 queries are DEFERRED to lead round 9's window;
-#   every deferred query was pre-verified with the driver-identical
-#   comparator (tools/check_queries.py) before the round closed —
-#   output committed as PREVERIFY_r08.txt — so nothing ships with
-#   zero hash evidence.
-#
-# * round 9 led with the 20 round-8 deferred queries, kept the 8
-#   reference queries pinned, re-externalized the 2 code-changed
-#   queries, and filled with the oldest round-3/4 cohort — closing the
-#   ledger at 241/241 queries with >=1 green external row
-#   (CORRECTNESS_r09.json, 50/50 green).
-#
-# STANDING ROTATION POLICY (round 10 onward, judge task r9#1): with the
-# ledger closed, each round's 50-slot window is (a) the 8 reference
-# pipeline queries, pinned; (b) every query whose CODE changed this
-# round (round-7/9 precedent); (c) the remainder filled OLDEST
-# EXTERNAL ROW FIRST, so no query's evidence ages past ~5 rounds.
-# Staleness is computed from CORRECTNESS_r01..r{N-1}.json (latest
-# round each query appeared in, ties broken by landing order).
-#
-# * round 10 applies the policy to the round-4 staleness cohort: all
-#   27 queries whose newest external row is r4 (TPC-H tail + scalar
-#   function families) lead, the 8 reference queries stay pinned, the
-#   5 round-10 code-changed queries re-externalize
-#   (ann_incremental_assign — argmin folded into the probe ranking,
-#   then the daily batch re-bounded to a trailing arrival window
-#   after the 1x/10x scale measurement caught the fraction-of-corpus
-#   batch compounding super-linearly, docs/SCALING.md;
-#   cheapest_path_lead_time — parallelism-derived checkpoint
-#   width, 24401d1; cusum_changepoint_events,
-#   value_equidepth_bins_events and weighted_median_value_type —
-#   rewritten onto the shared two-level prefix scan
-#   (operators/prefix.py) after the 100x decade showed their 5-key
-#   windows serializing, same hash at every SF), and the remaining
-#   10 slots go to the oldest
-#   (round-5) cohort, leading with the queries that sit directly on
-#   the artifact store whose serving path was rewritten in r9/r10
-#   (pagerank, IVF/PQ indexes, sketches, codec queries).
-#
-# * round 11 applies the policy again: 8 reference pinned, the 12
-#   round-11 code-changed queries (scale-adaptive sign-LSH banding —
-#   ann_lsh_cosine, dedup_embedding_cosine, mutual_nn_pairs,
-#   rp_project_embeddings; the adjacency-list wedge rewrite of
-#   link_prediction_suppliers; the three operators/prefix.py
-#   consumers after its NULL-semantics + size-gate rewrite; and the
-#   adaptive IVF centroid stride — ann_ivf_cosine, ann_ivf_pq,
-#   semdedup_cluster_prune, rrf_fuse_rankers), and the 30 remaining
-#   slots drain the round-5 staleness cohort except its 2 newest
-#   entries — the code-changed arm outranks the fill per (a)(b)(c),
-#   so those 2 stragglers (plus the r6 cohort) lead round 12.
-#
-# * round 12 applies the policy again: 8 reference pinned, the 13
-#   round-12 code-changed queries (the operators/graph.py wedge
-#   extraction; the builder-fingerprint hygiene sweep — every
-#   artifact builder that closure-captured a DataFrame/Column now
-#   derives its inputs inside, touching the IVF/PQ family plus the
-#   minhash-signature, simhash, novelty-index, and rollup-history
-#   builders; and the shared pre-cutoff posting extraction behind
-#   the ngram audit); the 29-slot fill takes the 2 round-5
-#   stragglers the r11 code-changed arm displaced plus 27 of the
-#   39-query round-6 cohort (a 28th, dedup_incremental_minhash,
-#   re-externalizes via the code-changed arm) — leaving 11 r6
-#   queries to lead round 13, each pre-verified with the
-#   driver-identical comparator before the round closed
-#   (PREVERIFY_r12.txt, r8 precedent: nothing ships with zero fresh
-#   hash evidence).
-#
-# * round 13 drains the backlog the r12 verdict flagged (the
-#   "no evidence older than r7" criterion slipped once, so the
-#   stale fill outranks discretionary churn this round): 8 reference
-#   pinned + 1 code-changed (link_prediction_suppliers, sole consumer
-#   of the wedge_adjacency empty-array guard) + the 11-query r6
-#   cohort + the complete 30-query r7 cohort = 50 exactly. After
-#   r13, no query's latest external row is older than r8.
-#
-# * round 14 applies the standing policy (now the invariant: after
-#   each round, no query's latest external row older than N-5):
-#   8 reference pinned + the 2 round-14 code-changed queries
-#   (dedup_embedding_cosine and mutual_nn_pairs — the two consumers
-#   of the lsh_scored_pairs artifact, whose build now routes through
-#   the occupancy-gated band self-join _band_candidate_pairs; the
-#   gate's naive branch is bitwise-identical, re-externalized to
-#   prove it) + the complete 38-query round-8 cohort + 2 slots
-#   filled from the oldest round-9 rows in landing order. After r14,
-#   no query's latest external row is older than r9.
-#
-# * round 15 applies the standing policy again: 8 reference pinned
-#   + the 3 round-15 code-changed queries (dedup_embedding_cosine
-#   and mutual_nn_pairs — the gate's corpus-size estimate hardened
-#   to a duplicate-proof per-band distinct sum, so the
-#   lsh_scored_pairs fingerprint rotated and the naive branch's
-#   bitwise-identity is re-proved externally; plus the NEW
-#   warning_streak_alerts_min2, the streak family's first external
-#   row with nonzero spark_rows in 13 rounds — the threshold-3
-#   original had passed vacuously at 0 oracle rows since r2) + the
-#   complete 35-query round-9 cohort + 4 slots filled from the
-#   oldest round-10 rows in landing order. After r15, no query's
-#   latest external row is older than r10 (the standing N−5
-#   invariant, held four rounds running).
+# STANDING ROTATION POLICY: each round's 50-slot window is (a) the 8
+# reference pipeline queries, pinned; (b) every query whose CODE
+# changed this round; (c) the remainder filled OLDEST EXTERNAL ROW
+# FIRST, so after each round no query's latest external row is older
+# than round N-5. Staleness is computed from
+# CORRECTNESS_r01..r{N-1}.json (latest round each query appeared in,
+# ties broken by landing order).
 #
 # Everything outside the prefix keeps local oracle coverage via
 # tests/test_oracle_parity.py, which parametrizes the full registry.
@@ -183,8 +70,7 @@ _PRIORITY_PREFIX = [
     # round-15 optimization session touched (r15 verdict task 1: their
     # oracle parity rested on builder-run checks; this window puts the
     # external oracle on them) + the round-16 code-changed queries +
-    # the full 33-query round-10 cohort + oldest round-11 fill = 50
-    # exactly.
+    # the full 33-query round-10 cohort = 50 exactly.
     #
     # -- reference pipeline core (8, pinned every round)
     "warning_notification",

@@ -126,17 +126,3 @@ MULTIMODAL_SCHEMA = T.StructType(
         ),
     ]
 )
-
-#: the testdata tables the harness runs on (TESTDATA.md)
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)

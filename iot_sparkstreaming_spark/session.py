@@ -21,9 +21,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: local[k] core count when SPARK_GRAFT_CPUS is unset
+DEFAULT_CPUS = "32"
+
 
 def get_spark(app_name: str = "iot_sparkstreaming_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

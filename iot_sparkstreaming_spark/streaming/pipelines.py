@@ -26,7 +26,6 @@ from iot_sparkstreaming_spark.functions.health import (
     DEFAULT_THRESHOLD,
     WARN_NONE,
     classify_warning,
-    round_pulse,
     tuple_string,
 )
 
@@ -123,15 +122,6 @@ def latest_location_rows(fitbit: DataFrame) -> DataFrame:
         F.to_timestamp(col("event_datetime"), "yyyy-MM-dd HH:mm:ss").alias("event_ts"),
         "lat",
         "long",
-    )
-
-
-def pulse_rounded(fitbit: DataFrame) -> DataFrame:
-    """The dead-code mapData projection (P3/P4,
-    workingTest.scala:246-256): user/lat/long with half-up rounded
-    int pulse."""
-    return fitbit.select(
-        "user_id", "lat", "long", round_pulse(col("pulse")).alias("pulse")
     )
 
 

@@ -13,9 +13,10 @@ anyway. Event-order within a key is enforced by sorting each
 micro-batch by event time inside the group function (Arrow batch,
 vectorized), making results deterministic given batch boundaries.
 
-GroupStateTimeout.NoTimeout keeps streak state forever — a real
-deployment with unbounded key cardinality would use event-time
-timeout to expire idle keys; surfaced as a parameter.
+Every operator here runs with GroupStateTimeout.NoTimeout, which
+keeps per-key state forever — a real deployment with unbounded key
+cardinality would need event-time timeouts (and ``state.hasTimedOut``
+handling in each group function) to expire idle keys.
 """
 
 from __future__ import annotations
@@ -48,7 +49,6 @@ STREAK_STATE_SCHEMA = T.StructType([T.StructField("streak", T.IntegerType())])
 def warning_streaks(
     warnings: DataFrame,
     min_streak: int = 3,
-    timeout: str = GroupStateTimeout.NoTimeout,
     order_cols: tuple[str, ...] = ("machine_timestamp",),
 ) -> DataFrame:
     """Per-user consecutive-warning streak detector.
@@ -112,7 +112,7 @@ def warning_streaks(
             outputStructType=STREAK_OUTPUT_SCHEMA,
             stateStructType=STREAK_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=timeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -136,10 +136,7 @@ LATEST_STATE_SCHEMA = T.StructType(
 )
 
 
-def stateful_latest_location(
-    located: DataFrame,
-    timeout: str = GroupStateTimeout.NoTimeout,
-) -> DataFrame:
+def stateful_latest_location(located: DataFrame) -> DataFrame:
     """Event-time last-value-per-key as a STATE-STORE operator.
 
     The `latest_location` Cassandra table kept arrival-order last
@@ -196,13 +193,13 @@ def stateful_latest_location(
             outputStructType=LATEST_OUTPUT_SCHEMA,
             stateStructType=LATEST_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=timeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
 
 # ---------------------------------------------------------------------------
-# Streaming EWMA on the transformWithState API (Spark 4)
+# Streaming EWMA
 # ---------------------------------------------------------------------------
 
 EWMA_OUTPUT_SCHEMA = T.StructType(
@@ -273,65 +270,6 @@ def streaming_ewma(events: DataFrame) -> DataFrame:
             ),
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def streaming_ewma_tws(events: DataFrame) -> DataFrame:
-    """The SAME operator on Spark 4's ``transformWithStateInPandas``
-    — the successor API with typed state handles (value/list/map), so
-    the bounded tail is a first-class LIST STATE instead of an array
-    inside one state tuple. Requires the RocksDB state-store provider
-    AND the ``google.protobuf`` package (the API's driver worker
-    speaks protobuf to the JVM), which this container lacks — the
-    test skips on that ImportError and :func:`streaming_ewma` above
-    is the working twin. Kept because the arithmetic and state
-    contract are identical, so on a protobuf-equipped cluster this is
-    a drop-in swap."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class EwmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._tail = handle.getListState(
-                "tail", T.StructType([T.StructField("vc", T.LongType())])
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            (user_id,) = key
-            tail = [int(r[0]) for r in self._tail.get()]
-            out = []
-            pdf = pd.concat(list(rows), ignore_index=True)
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for eid, val in zip(pdf["event_id"], pdf["value"]):
-                vc = int(round(float(val) * 10000))
-                window = (tail + [vc])[-16:]
-                m = len(window)
-                scaled = sum(x << (16 - m + i) for i, x in enumerate(window))
-                out.append(
-                    {
-                        "user_id": int(user_id),
-                        "event_id": int(eid),
-                        "value": vc / 10000.0,
-                        "ewma": scaled / 655360000.0,
-                    }
-                )
-                tail = window[-15:]
-            self._tail.put([(v,) for v in tail])
-            yield pd.DataFrame(out, columns=[f.name for f in EWMA_OUTPUT_SCHEMA])
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=EwmaProcessor(),
-            outputStructType=EWMA_OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
         )
     )
 
@@ -867,8 +805,8 @@ def streaming_ohlc(events: DataFrame) -> DataFrame:
     — the ``streaming_twap`` discipline).
 
     State per key: ten scalars. Keys per store: #types × #hours —
-    time-bounded retention would use event-time timeout; surfaced as
-    the same NoTimeout parameter family as the other operators.
+    time-bounded retention would need an event-time timeout, which no
+    operator here sets (see the module docstring).
 
     Input columns: ``event_type``, ``event_id``, ``ts``, ``value``.
     """

@@ -13,7 +13,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from iot_sparkstreaming_spark.schemas import TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -114,7 +113,3 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     # TimestampType: already what downstream expects — pass through.
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every harness table as an unmaterialized DataFrame."""
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}

@@ -1,16 +1,15 @@
-"""Multimodal plumbing tests: Arrow batch shapes, stub behavior,
-payload pruning."""
+"""Multimodal tests: codec round-trips and conformance, Arrow batch
+invariance of every codec chain, payload pruning."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from iot_sparkstreaming_spark.operators import multimodal as mm
 from iot_sparkstreaming_spark.operators.multimodal import (
     assets_from_documents,
-    decode_asset,
     extract_features,
-    thumbnail_stub,
 )
 from iot_sparkstreaming_spark.tables import load_table
 
@@ -56,32 +55,19 @@ def test_extract_features_multibatch(spark, assets):
     assert all(jvm[i] == byid[i].sha256 for i in jvm)
 
 
-def test_thumbnail_stub_bounds(assets):
-    rows = thumbnail_stub(assets, max_px=64).collect()
-    assert rows and all(1 <= r.thumb_w <= 64 and 1 <= r.thumb_h <= 64 for r in rows)
-
-
-def test_decode_stub_raises():
-    # video stays stubbed; audio (WAV) and image (BMP) are real now
-    with pytest.raises(NotImplementedError):
-        decode_asset(b"\x00\x01", "video")
-    # a non-BMP image payload without PIL is also a NotImplementedError
-    with pytest.raises(NotImplementedError):
-        decode_asset(b"\x89PNG\r\n", "image")
-
-
 def test_wav_codec_roundtrip():
     """Real codec: synthesize_wav writes a genuine RIFF/WAVE container
-    and decode_asset parses it back to the closed-form samples."""
+    and decode_wav parses it back to the closed-form samples."""
     from iot_sparkstreaming_spark.operators.multimodal import (
         WAV_SAMPLE_RATE,
+        decode_wav,
         synthesize_wav,
     )
 
     aid = 42
     payload = synthesize_wav(aid)
     assert payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"
-    d = decode_asset(payload, "audio")
+    d = decode_wav(payload)
     assert d["sample_rate"] == WAV_SAMPLE_RATE
     assert d["n_channels"] == 1
     n = 64 + aid % 128
@@ -90,56 +76,61 @@ def test_wav_codec_roundtrip():
     assert d["samples"] == expected
 
 
-def test_audio_features_batch_invariance(spark):
-    """Chained encode→decode mapInPandas passes give identical results
-    under tiny Arrow batches + many partitions vs one partition."""
-    from iot_sparkstreaming_spark.operators.multimodal import (
-        audio_features,
-        wav_audio_assets,
-    )
+#: every encode→decode (or pack→walk) chain the multimodal queries run
+CODEC_CHAINS = {
+    "wav": lambda d: mm.audio_features(mm.encode_assets(d, "audio", mm.synthesize_wav)),
+    "bmp": lambda d: mm.image_features(
+        mm.encode_assets(d, "image", mm.synthesize_bmp), mm.decode_bmp
+    ),
+    "png": lambda d: mm.image_features(
+        mm.encode_assets(d, "image", mm.synthesize_png), mm.decode_png
+    ),
+    "gif": lambda d: mm.gif_image_features(
+        mm.encode_assets(d, "image", mm.synthesize_gif)
+    ),
+    "y4m": lambda d: mm.y4m_frame_features(
+        mm.encode_assets(d, "video", mm.synthesize_y4m)
+    ),
+    "bmp_thumbnail": lambda d: mm.image_thumbnails(
+        mm.encode_assets(d, "image", mm.synthesize_bmp)
+    ),
+    "tar": lambda d: mm.shard_members(
+        mm.pack_shards(d, mm.pack_tar), mm.walk_tar, mm.TAR_MEMBERS_SCHEMA
+    ),
+    "zip": lambda d: mm.shard_members(
+        mm.pack_shards(d, mm.pack_zip), mm.walk_zip, mm.ZIP_MEMBERS_SCHEMA
+    ),
+}
 
+
+@pytest.mark.parametrize("chain", sorted(CODEC_CHAINS))
+def test_codec_chain_batch_invariance(spark, chain):
+    """Chained mapInPandas passes give identical results under tiny
+    Arrow batches + many partitions vs one partition."""
+    run = CODEC_CHAINS[chain]
     docs = load_table(spark, SF, "documents")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        multi = audio_features(wav_audio_assets(docs.repartition(8))).collect()
+        multi = run(docs.repartition(8)).collect()
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-    single = audio_features(wav_audio_assets(docs.coalesce(1))).collect()
+    single = run(docs.coalesce(1)).collect()
     assert multi and sorted(map(tuple, multi)) == sorted(map(tuple, single))
-    assert all(r.peak_abs <= 32768 and r.n_frames >= 64 for r in multi)
-
-
-def test_frame_sample_stub_contract(assets):
-    from iot_sparkstreaming_spark.operators.multimodal import frame_sample_stub
-
-    rows = frame_sample_stub(assets, every_n=10, max_frames=8).collect()
-    assert rows
-    per_asset: dict[int, list] = {}
-    for r in rows:
-        per_asset.setdefault(r.asset_id, []).append(r)
-    video_ids = {
-        r.asset_id for r in assets.filter(F.col("modality") == "video").collect()
-    }
-    assert set(per_asset) <= video_ids
-    for frames in per_asset.values():
-        frames.sort(key=lambda r: r.sample_seq)
-        assert len(frames) <= 8
-        assert [r.sample_seq for r in frames] == list(range(len(frames)))
-        assert [r.frame_index for r in frames] == [
-            i * 10 for i in range(len(frames))
-        ]
 
 
 def test_bmp_codec_roundtrip():
     """Real image codec: synthesize_bmp writes a genuine 24-bit BMP
-    (headers, bottom-up padded rows) and decode_asset parses it back
+    (headers, bottom-up padded rows) and decode_bmp parses it back
     to the closed-form pixels."""
-    from iot_sparkstreaming_spark.operators.multimodal import synthesize_bmp
+    from iot_sparkstreaming_spark.operators.multimodal import (
+        decode_bmp,
+        synthesize_bmp,
+    )
 
     aid = 57  # w = 4 + 57%13 = 9 → 27-byte rows + 1 pad byte: pad path on
     payload = synthesize_bmp(aid)
     assert payload[:2] == b"BM"
-    d = decode_asset(payload, "image")
+    d = decode_bmp(payload)
     w, h = 4 + aid % 13, 3 + aid % 7
     assert (d["width"], d["height"]) == (w, h)
     for y in range(h):
@@ -157,6 +148,7 @@ def test_binaryfile_ingest_matches_packed_path(spark, tmp_path):
     downstream."""
     from iot_sparkstreaming_spark.operators.multimodal import (
         assets_from_binary_files,
+        decode_bmp,
         image_features,
         synthesize_bmp,
     )
@@ -167,7 +159,7 @@ def test_binaryfile_ingest_matches_packed_path(spark, tmp_path):
     (tmp_path / "ignore.txt").write_text("not an image")
 
     assets = assets_from_binary_files(spark, str(tmp_path))
-    got = {r.asset_id: r for r in image_features(assets).collect()}
+    got = {r.asset_id: r for r in image_features(assets, decode_bmp).collect()}
     assert set(got) == set(ids)
     for aid in ids:
         r = got[aid]

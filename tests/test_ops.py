@@ -123,6 +123,46 @@ def test_fk_audit_counts_null_fks_and_orphan_rows(spark, tmp_path):
     assert r.orphan_keys == 1
 
 
+def test_fk_audit_duplicate_parent_pk_matches_oracle(spark, duck, tmp_path):
+    """A duplicated parent PK is the corrupted data the audit exists
+    for: it must not multiply child rows through the per-key join.
+    Plant duplicates in a broadcast parent (region) and in the
+    shuffled one (orders); every count must equal the oracle's, which
+    is immune to duplicates by construction (COUNT over the child,
+    NOT IN over the parent)."""
+    import shutil
+
+    import duckdb
+
+    from iot_sparkstreaming_spark.queries.ops import FK_AUDIT_ORACLE
+    from tests.conftest import TABLES, assert_matches_oracle_exact
+
+    dst = tmp_path / "dup_pk"
+    dst.mkdir()
+    for t in TABLES:
+        if t not in ("region", "orders"):
+            shutil.copy(f"{SF_DIR}/{t}.parquet", dst / f"{t}.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"""COPY (SELECT * FROM '{SF_DIR}/region.parquet' UNION ALL
+                  SELECT * FROM '{SF_DIR}/region.parquet' WHERE r_regionkey = 0)
+            TO '{dst}/region.parquet' (FORMAT PARQUET)"""
+    )
+    con.execute(
+        f"""COPY (SELECT * FROM '{SF_DIR}/orders.parquet' UNION ALL
+                  SELECT * FROM '{SF_DIR}/orders.parquet' WHERE o_orderkey % 7 = 0)
+            TO '{dst}/orders.parquet' (FORMAT PARQUET)"""
+    )
+    con.close()
+
+    audit = fk_integrity_audit(spark, str(dst))
+    rows = {r.relationship: r for r in audit.collect()}
+    for name in ("nation.n_regionkey->region", "lineitem.l_orderkey->orders"):
+        child_t = name.split(".")[0]
+        assert rows[name].child_rows == load_table(spark, SF_DIR, child_t).count()
+    assert_matches_oracle_exact(audit, duck(str(dst)), FK_AUDIT_ORACLE)
+
+
 def test_pit_join_version_containment(spark):
     """Every purchase maps to exactly one dimension version whose
     interval contains it, the active state is never 'purchase', and

@@ -204,7 +204,9 @@ def test_shuffles_start_wide_and_aqe_coalesces(spark):
     straight back down."""
     import os
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from iot_sparkstreaming_spark.session import DEFAULT_CPUS
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS))
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert (
         spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"

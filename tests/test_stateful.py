@@ -224,32 +224,6 @@ def test_streaming_ewma_twin_parity_and_batch_boundary(spark, tmp_path):
     assert got == want
 
 
-def test_streaming_ewma_tws_variant(spark, tmp_path):
-    """Same contract on Spark 4's transformWithStateInPandas — skipped
-    where the API's protobuf dependency is absent (this container)."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState driver worker needs protobuf"
-    )
-    from iot_sparkstreaming_spark.queries.analytics import ewma_user_value
-    from iot_sparkstreaming_spark.streaming.stateful import streaming_ewma_tws
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        got, _ = _run_ewma_twin(spark, tmp_path, streaming_ewma_tws)
-        want = {
-            (r.user_id, r.event_id): (r.value, r.ewma)
-            for r in ewma_user_value(spark, "/root/testdata/sf0.001").collect()
-        }
-        assert got == want
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_streaming_ewma_state_survives_restart(spark, tmp_path):
     """Kill the EWMA query between micro-batches and restart from the
     same checkpoint: the restored 15-value tail must make the second

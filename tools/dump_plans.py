@@ -65,7 +65,7 @@ SHOWCASE = [
     ("label_propagation_communities", "cache-partitioned edge list: each LPA round joins labels exchange-free on the edge side; (node,label) counts combine map-side"),
     ("dedup_incremental_minhash", "batch band rows join the memoized historical index; signatures ride the join; daily cost independent of corpus re-processing"),
     ("snapshot_diff_orders", "one full-outer sort-merge join on the PK; row-local CASE comparison; changed rows only"),
-    ("fk_integrity_audit", "ONE child scan per relationship: all four stats fold out of the per-key aggregate left-joined to the unique-PK parent; small parents broadcast"),
+    ("fk_integrity_audit", "ONE child scan per relationship: all four stats fold out of the per-key aggregate left-joined to the distinct parent keys; small parents broadcast"),
     ("scd2_point_in_time_join", "dimension build on ONE user_id exchange; PIT join is equi on user_id with interval containment as residual filter"),
     ("survival_signup_to_purchase", "three user_id aggs share one partitioning; at-risk window runs over the bucket table, not subjects"),
     ("kmeans_lloyd_embeddings", "per round: broadcast centroids, hash-agg argmin (no sort window), (cid,dim) exact-sum update — only k*d sums shuffle"),

@@ -871,6 +871,7 @@ def main() -> None:
             sorted(_arts.LOAD_TIMES.items(), key=lambda kv: -kv[1])
         )
         full["artifact_load_total_sec"] = round(sum(_arts.LOAD_TIMES.values()), 4)
+        full["artifact_fail_open"] = dict(sorted(_arts.FAIL_OPEN.items()))
     except Exception:  # noqa: BLE001 — accounting must not kill the bench
         pass
     (REPO / "BENCH_FULL.json").write_text(json.dumps(full, indent=2) + "\n")

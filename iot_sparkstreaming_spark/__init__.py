@@ -19,7 +19,14 @@ collects in any operator, broadcast hints for dimension joins, AQE on,
 partition-count knobs surfaced in ``session.py``.
 """
 
-from iot_sparkstreaming_spark.session import get_spark
+from iot_sparkstreaming_spark import zipcache
+
+# every Python worker that imports the engine (task workers through
+# worker_daemon, DataSource planner workers on their first unpickle)
+# stops re-reading pyspark.zip and the Spark core jar on each call
+zipcache.install()
+
+from iot_sparkstreaming_spark.session import get_spark  # noqa: E402
 
 __all__ = ["get_spark"]
 __version__ = "0.1.0"

@@ -33,7 +33,8 @@ replacement for ``session_memo`` with a disk tier underneath:
   in-session copy.
 * **fail-open**: any I/O problem (read-only disk, missing store,
   concurrent prune) degrades to the plain session memo — the disk
-  tier is a pure accelerator, never a correctness dependency.
+  tier is a pure accelerator, never a correctness dependency. Each
+  fallback is recorded with its reason in ``FAIL_OPEN``.
 * **single-materialization cold path**: builders return LAZY plans;
   the atomic parquet save is the one action that computes the build,
   and consumers are served the re-loaded parquet scan. Only the
@@ -85,6 +86,11 @@ _FORMAT_VERSION = 1
 #: residual (r8 verdict task 3).
 BUILD_TIMES: dict[str, float] = {}
 LOAD_TIMES: dict[str, float] = {}
+#: ``FAIL_OPEN[name]`` = why the disk tier last fell back to the plain
+#: session memo for that artifact (``"<stage>: <exception>"``; stage
+#: ``load`` = fingerprint or disk load, ``save``, or ``reload`` after
+#: the save); bench.py copies it too.
+FAIL_OPEN: dict[str, str] = {}
 
 
 def store_root() -> str:
@@ -237,7 +243,14 @@ def _save(value, final_dir: str) -> bool:
         shutil.rmtree(tmp, ignore_errors=True)
         # a racing writer may have renamed first — their artifact is
         # bit-identical (same fingerprint ⇒ same inputs + code).
-        return os.path.isdir(final_dir)
+        if os.path.isdir(final_dir):
+            return True
+        raise
+
+
+def _fail_open(name: str, stage: str, exc: Exception) -> None:
+    first_line = (str(exc).strip().splitlines() or [""])[0]
+    FAIL_OPEN[name] = f"{stage}: {type(exc).__name__}: {first_line}"[:300]
 
 
 def _materialize_fallback(value):
@@ -346,7 +359,8 @@ def artifact_memo(spark: SparkSession, key: tuple, builder):
                     LOAD_TIMES.get(name, 0.0) + time.perf_counter() - t0, 4
                 )
                 return loaded
-        except Exception:  # noqa: BLE001 — fail-open by contract
+        except Exception as exc:  # noqa: BLE001 — fail-open by contract
+            _fail_open(name, "load", exc)
             t0 = time.perf_counter()
             value = _materialize_fallback(builder())
             BUILD_TIMES[name] = round(
@@ -360,8 +374,8 @@ def artifact_memo(spark: SparkSession, key: tuple, builder):
             if _save(value, final_dir):
                 _prune_stale(parent, leaf)
                 saved = True
-        except Exception:  # noqa: BLE001 — fail-open by contract
-            pass
+        except Exception as exc:  # noqa: BLE001 — fail-open by contract
+            _fail_open(name, "save", exc)
         BUILD_TIMES[name] = round(
             BUILD_TIMES.get(name, 0.0) + time.perf_counter() - t0, 4
         )
@@ -377,7 +391,8 @@ def artifact_memo(spark: SparkSession, key: tuple, builder):
             # block-manager double-store on the cold path).
             try:
                 return _load(spark, final_dir)
-            except Exception:  # noqa: BLE001 — fail-open by contract
+            except Exception as exc:  # noqa: BLE001 — fail-open by contract
+                _fail_open(name, "reload", exc)
                 return _materialize_fallback(value)
         return _materialize_fallback(value)
 

@@ -27,6 +27,13 @@ semantics through the standard writer API:
   (write-temp + rename).
 * ``abort(messages)`` removes whatever the failed job staged.
 
+Each write (or micro-batch) is three Python round trips: Spark creates
+the writer and runs ``commit`` in its planner workers, and runs one
+``write`` task per partition in task workers. The sink's own code is a
+few ms of that; the rest is worker start-up, of which ``zipcache``
+removes the per-call re-read of ``pyspark.zip`` and the Spark core jar
+(a live ``keyed_files`` micro-batch went from ~900 to ~270 ms).
+
 ``mode("append")`` upserts into the existing table state;
 ``mode("overwrite")`` replaces it. Scale honesty, same caveat as
 ``io/sinks.py``: the driver-side merge is the CI twin of a real

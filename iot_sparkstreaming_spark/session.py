@@ -8,6 +8,9 @@ settings that matter on a real cluster reading 100 TB:
 * Shuffle partition count is a knob (`SPARK_GRAFT_CPUS` locally; on a
   cluster you'd size it to ~2-3x total cores and let AQE coalesce).
 * Arrow enabled so any Pandas-UDF path is batch-vectorized.
+* Python workers start through ``worker_daemon`` (see ``zipcache``)
+  and import the engine from ``ENGINE_ROOT``, wherever the driver
+  was started.
 * Broadcast threshold left at default (10 MB) — small tables broadcast
   automatically and AQE re-plans by runtime size; queries hint
   `broadcast()` ONLY on constant-cardinality inputs (region, nation,
@@ -23,6 +26,9 @@ from pyspark.sql import SparkSession
 
 #: local[k] core count when SPARK_GRAFT_CPUS is unset
 DEFAULT_CPUS = "32"
+
+#: the directory holding the package, put on the Python workers' path
+ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "iot_sparkstreaming_spark") -> SparkSession:
@@ -66,5 +72,7 @@ def get_spark(app_name: str = "iot_sparkstreaming_spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.python.daemon.module", "iot_sparkstreaming_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", ENGINE_ROOT)
     )
     return builder.getOrCreate()

@@ -158,6 +158,28 @@ def test_fail_open_on_unwritable_store(spark, monkeypatch):
     _clear_memo(spark)
 
 
+def test_fail_open_reason_recorded_and_query_matches_oracle(
+    spark, duck, tmp_path, monkeypatch, capsys
+):
+    """An unwritable store records why the save fell back, prints
+    nothing, and a registered artifact-backed query still returns its
+    oracle rows."""
+    from iot_sparkstreaming_spark.queries.registry import load_all
+    from tests.conftest import SF_DIR_ORACLE, assert_matches_oracle_exact
+
+    (tmp_path / "file").write_text("")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "file" / "store"))
+    artifacts.FAIL_OPEN.clear()
+    q = load_all()["bm25_topk_docs"]
+    _clear_memo(spark)
+    assert_matches_oracle_exact(q.spark(spark, SF_DIR_ORACLE), duck(SF_DIR_ORACLE), q.oracle)
+    assert artifacts.FAIL_OPEN["bm25_index"].startswith("save: NotADirectoryError"), (
+        artifacts.FAIL_OPEN
+    )
+    assert capsys.readouterr().out == ""
+    _clear_memo(spark)
+
+
 def test_unsupported_shape_skips_disk(spark, store):
     """Builders returning non-serializable shapes still work — they
     just stay session-scoped (no artifact dir written)."""

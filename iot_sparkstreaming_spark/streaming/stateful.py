@@ -9,19 +9,25 @@ checkpointed, partitioned by key, recovered on restart.
 Scale posture: state is per-key and O(1) per key (a few scalars), so
 the store scales with distinct keys, not events; partitioning is the
 group-by key hash — the same shuffle the aggregation would need
-anyway. Event-order within a key is enforced by sorting each
-micro-batch by event time inside the group function (Arrow batch,
-vectorized), making results deterministic given batch boundaries.
+anyway.
 
-Every operator here runs with GroupStateTimeout.NoTimeout, which
-keeps per-key state forever — a real deployment with unbounded key
-cardinality would need event-time timeouts (and ``state.hasTimedOut``
-handling in each group function) to expire idle keys.
+Every operator is a per-key fold run by :func:`_fold_groups`, the one
+place that speaks the ``applyInPandasWithState`` protocol. It
+concatenates every Arrow chunk of a key's micro-batch into one frame
+and, for the order-sensitive operators, sorts it once by event time
+(stable), so results are deterministic given batch boundaries and do
+not depend on ``spark.sql.execution.arrow.maxRecordsPerBatch``.
+
+``_fold_groups`` is also the one place that sets the timeout:
+GroupStateTimeout.NoTimeout, which keeps per-key state forever — a
+real deployment with unbounded key cardinality would need event-time
+timeouts (and ``state.hasTimedOut`` handling there) to expire idle
+keys.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame
@@ -30,6 +36,50 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
+
+
+def _fold_groups(
+    frame: DataFrame,
+    by: str | list[str],
+    fold: Callable[[tuple, tuple, pd.DataFrame], tuple[tuple, list[tuple]]],
+    out_schema: T.StructType,
+    state_schema: T.StructType,
+    init: tuple[Any, ...],
+    order: tuple[str, ...] = (),
+    mode: str = "append",
+) -> DataFrame:
+    """Group ``frame`` by ``by`` and run ``fold(key, state, pdf)`` once
+    per key per micro-batch. ``pdf`` holds all of the key's rows in the
+    micro-batch, stably sorted by ``order`` when given; ``state`` is
+    the stored state tuple, or ``init`` for a new key (shared by every
+    new key in a worker, so ``fold`` must not mutate it). ``fold``
+    returns ``(new_state, rows)``, each row a tuple in ``out_schema``
+    order."""
+    cols = [f.name for f in out_schema]
+
+    def fn(
+        key: tuple,
+        pdfs: Iterator["pd.DataFrame"],
+        state: GroupState,
+    ) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        chunks = list(pdfs)  # usually one: concat would only copy it
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        if order:
+            pdf = pdf.sort_values(list(order), kind="mergesort")
+        new_state, rows = fold(key, state.get if state.exists else init, pdf)
+        state.update(new_state)
+        yield pd.DataFrame(rows, columns=cols)
+
+    return frame.groupBy(by).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
 
 WARN_NONE = "no-use"
 
@@ -72,48 +122,29 @@ def warning_streaks(
     equality this way.
     """
 
-    def fn(
-        key: tuple[str],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        (user_id,) = key
+    def fold(key, state, pdf):
         # output schema declares user_id:string; the grouping key keeps
         # the input's type (bigint for events-derived streams) — coerce.
-        user_id = str(user_id)
-        (streak,) = state.get if state.exists else (0,)
-        out: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(list(order_cols), kind="mergesort")
-            for w, ts in zip(pdf["warning"], pdf["machine_timestamp"]):
-                streak = 0 if w == WARN_NONE else streak + 1
-                if streak >= min_streak:
-                    out.append(
-                        {
-                            "user_id": user_id,
-                            "streak_len": streak,
-                            "machine_timestamp": ts,
-                            "warning": w,
-                        }
-                    )
-        state.update((streak,))
-        yield pd.DataFrame(out, columns=[f.name for f in STREAK_OUTPUT_SCHEMA.fields])
+        user_id = str(key[0])
+        (streak,) = state
+        rows = []
+        for w, ts in zip(pdf["warning"], pdf["machine_timestamp"]):
+            streak = 0 if w == WARN_NONE else streak + 1
+            if streak >= min_streak:
+                rows.append((user_id, streak, ts, w))
+        return (streak,), rows
 
     in_cols = ["user_id", "warning", "machine_timestamp"] + [
         c for c in order_cols if c not in ("user_id", "warning", "machine_timestamp")
     ]
-    return (
-        warnings.select(*in_cols)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=STREAK_OUTPUT_SCHEMA,
-            stateStructType=STREAK_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_groups(
+        warnings.select(*in_cols),
+        "user_id",
+        fold,
+        STREAK_OUTPUT_SCHEMA,
+        STREAK_STATE_SCHEMA,
+        (0,),
+        order=tuple(order_cols),
     )
 
 
@@ -151,50 +182,21 @@ def stateful_latest_location(located: DataFrame) -> DataFrame:
     ``long`` (strings, per reference fidelity — SURVEY.md §1.2).
     """
 
-    def fn(
-        key: tuple[str],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def fold(key, state, pdf):
+        best = state
+        for ms, la, lo in zip(pdf["event_millis"], pdf["lat"], pdf["long"]):
+            if ms > best[0]:
+                best = (int(ms), la, lo)
+        rows = [] if best is state else [(key[0], *best)]
+        return best, rows
 
-        (user_id,) = key
-        best_ms, best_lat, best_long = (
-            state.get if state.exists else (-1, None, None)
-        )
-        changed = False
-        for pdf in pdfs:
-            for ms, la, lo in zip(pdf["event_millis"], pdf["lat"], pdf["long"]):
-                if ms > best_ms:
-                    best_ms, best_lat, best_long = int(ms), la, lo
-                    changed = True
-        state.update((best_ms, best_lat, best_long))
-        if changed:
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": user_id,
-                        "event_millis": best_ms,
-                        "lat": best_lat,
-                        "long": best_long,
-                    }
-                ]
-            )
-        else:
-            yield pd.DataFrame(
-                [], columns=[f.name for f in LATEST_OUTPUT_SCHEMA.fields]
-            )
-
-    return (
-        located.select("user_id", "event_millis", "lat", "long")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=LATEST_OUTPUT_SCHEMA,
-            stateStructType=LATEST_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_groups(
+        located.select("user_id", "event_millis", "lat", "long"),
+        "user_id",
+        fold,
+        LATEST_OUTPUT_SCHEMA,
+        LATEST_STATE_SCHEMA,
+        (-1, None, None),
     )
 
 
@@ -230,47 +232,27 @@ def streaming_ewma(events: DataFrame) -> DataFrame:
     Input columns: ``user_id``, ``event_id``, ``ts``, ``value``.
     """
 
-    def fn(
-        key: tuple[int],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def fold(key, state, pdf):
+        user_id = int(key[0])
+        tail = list(state[0])
+        rows = []
+        for eid, val in zip(pdf["event_id"], pdf["value"]):
+            vc = int(round(float(val) * 10000))
+            window = (tail + [vc])[-16:]
+            m = len(window)
+            scaled = sum(x << (16 - m + i) for i, x in enumerate(window))
+            rows.append((user_id, int(eid), vc / 10000.0, scaled / 655360000.0))
+            tail = window[-15:]
+        return (tail,), rows
 
-        (user_id,) = key
-        tail = list(state.get[0]) if state.exists else []
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for eid, val in zip(pdf["event_id"], pdf["value"]):
-                vc = int(round(float(val) * 10000))
-                window = (tail + [vc])[-16:]
-                m = len(window)
-                scaled = sum(x << (16 - m + i) for i, x in enumerate(window))
-                out.append(
-                    {
-                        "user_id": int(user_id),
-                        "event_id": int(eid),
-                        "value": vc / 10000.0,
-                        "ewma": scaled / 655360000.0,
-                    }
-                )
-                tail = window[-15:]
-        state.update((tail,))
-        yield pd.DataFrame(out, columns=[f.name for f in EWMA_OUTPUT_SCHEMA])
-
-    return (
-        events.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=EWMA_OUTPUT_SCHEMA,
-            stateStructType=T.StructType(
-                [T.StructField("tail", T.ArrayType(T.LongType()))]
-            ),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_groups(
+        events.select("user_id", "event_id", "ts", "value"),
+        "user_id",
+        fold,
+        EWMA_OUTPUT_SCHEMA,
+        T.StructType([T.StructField("tail", T.ArrayType(T.LongType()))]),
+        ([],),
+        order=("ts", "event_id"),
     )
 
 
@@ -309,44 +291,24 @@ def streaming_transitions(events: DataFrame) -> DataFrame:
     Input columns: ``user_id``, ``event_id``, ``ts``, ``event_type``.
     """
 
-    def fn(
-        key: tuple[int],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def fold(key, state, pdf):
+        user_id = int(key[0])
+        (last,) = state
+        rows = []
+        for eid, et in zip(pdf["event_id"], pdf["event_type"]):
+            if last is not None:
+                rows.append((user_id, last, et, int(eid)))
+            last = et
+        return (last,), rows
 
-        (user_id,) = key
-        last = state.get[0] if state.exists else None
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for eid, et in zip(pdf["event_id"], pdf["event_type"]):
-                if last is not None:
-                    out.append(
-                        {
-                            "user_id": int(user_id),
-                            "from_type": last,
-                            "to_type": et,
-                            "event_id": int(eid),
-                        }
-                    )
-                last = et
-        state.update((last,))
-        yield pd.DataFrame(out, columns=[f.name for f in TRANSITION_OUTPUT_SCHEMA])
-
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=TRANSITION_OUTPUT_SCHEMA,
-            stateStructType=T.StructType(
-                [T.StructField("last_type", T.StringType())]
-            ),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_groups(
+        events.select("user_id", "event_id", "ts", "event_type"),
+        "user_id",
+        fold,
+        TRANSITION_OUTPUT_SCHEMA,
+        T.StructType([T.StructField("last_type", T.StringType())]),
+        (None,),
+        order=("ts", "event_id"),
     )
 
 
@@ -379,63 +341,40 @@ def streaming_coverage(events: DataFrame, window_ms: int = 300 * 1000) -> DataFr
     Input columns: ``user_id``, ``event_id``, ``ts``.
     """
 
-    def fn(
-        key: tuple[int],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def fold(key, state, pdf):
+        user_id = int(key[0])
+        cur_s, cur_e, covered, n_iv, n_seg = state
+        rows = []
+        for eid, ts in zip(pdf["event_id"], pdf["ts"]):
+            s = int(ts.value // 1_000_000)  # pandas Timestamp → epoch ms
+            e = s + window_ms
+            if cur_e is None or s >= cur_e:
+                if cur_e is not None:
+                    covered += cur_e - cur_s
+                cur_s, cur_e = s, e
+                n_seg += 1
+            else:
+                cur_e = max(cur_e, e)
+            n_iv += 1
+            rows.append((user_id, int(eid), n_iv, n_seg, covered + (cur_e - cur_s)))
+        return (cur_s, cur_e, covered, n_iv, n_seg), rows
 
-        (user_id,) = key
-        if state.exists:
-            cur_s, cur_e, covered, n_iv, n_seg = state.get
-        else:
-            cur_s = cur_e = None
-            covered = n_iv = n_seg = 0
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for eid, ts in zip(pdf["event_id"], pdf["ts"]):
-                s = int(ts.value // 1_000_000)  # pandas Timestamp → epoch ms
-                e = s + window_ms
-                if cur_e is None or s >= cur_e:
-                    if cur_e is not None:
-                        covered += cur_e - cur_s
-                    cur_s, cur_e = s, e
-                    n_seg += 1
-                else:
-                    cur_e = max(cur_e, e)
-                n_iv += 1
-                out.append(
-                    {
-                        "user_id": int(user_id),
-                        "event_id": int(eid),
-                        "n_intervals": n_iv,
-                        "n_segments": n_seg,
-                        "covered_ms": covered + (cur_e - cur_s),
-                    }
-                )
-        state.update((cur_s, cur_e, covered, n_iv, n_seg))
-        yield pd.DataFrame(out, columns=[f.name for f in COVERAGE_OUTPUT_SCHEMA])
-
-    return (
-        events.select("user_id", "event_id", "ts")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=COVERAGE_OUTPUT_SCHEMA,
-            stateStructType=T.StructType(
-                [
-                    T.StructField("cur_s", T.LongType()),
-                    T.StructField("cur_e", T.LongType()),
-                    T.StructField("covered", T.LongType()),
-                    T.StructField("n_iv", T.LongType()),
-                    T.StructField("n_seg", T.LongType()),
-                ]
-            ),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_groups(
+        events.select("user_id", "event_id", "ts"),
+        "user_id",
+        fold,
+        COVERAGE_OUTPUT_SCHEMA,
+        T.StructType(
+            [
+                T.StructField("cur_s", T.LongType()),
+                T.StructField("cur_e", T.LongType()),
+                T.StructField("covered", T.LongType()),
+                T.StructField("n_iv", T.LongType()),
+                T.StructField("n_seg", T.LongType()),
+            ]
+        ),
+        (None, None, 0, 0, 0),
+        order=("ts", "event_id"),
     )
 
 
@@ -471,58 +410,39 @@ def streaming_funnel(events: DataFrame) -> DataFrame:
     Input columns: ``user_id``, ``event_id``, ``ts``, ``event_type``.
     """
 
-    def fn(
-        key: tuple[int],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def fold(key, state, pdf):
+        user_id = int(key[0])
+        slots = list(state)
+        rows = []
+        for eid, ts, et in zip(pdf["event_id"], pdf["ts"], pdf["event_type"]):
+            ms = int(ts.value // 1_000_000)
+            if et == _FUNNEL_STAGES[0]:
+                if slots[0] is None:
+                    slots[0] = ms
+            elif et == _FUNNEL_STAGES[1]:
+                if slots[1] is None and slots[0] is not None and ms > slots[0]:
+                    slots[1] = ms
+            elif et == _FUNNEL_STAGES[2]:
+                if slots[2] is None and slots[1] is not None and ms > slots[1]:
+                    slots[2] = ms
+            depth = sum(s is not None for s in slots)
+            rows.append((user_id, int(eid), depth, *slots))
+        return tuple(slots), rows
 
-        (user_id,) = key
-        slots = list(state.get) if state.exists else [None, None, None]
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for eid, ts, et in zip(pdf["event_id"], pdf["ts"], pdf["event_type"]):
-                ms = int(ts.value // 1_000_000)
-                if et == _FUNNEL_STAGES[0]:
-                    if slots[0] is None:
-                        slots[0] = ms
-                elif et == _FUNNEL_STAGES[1]:
-                    if slots[1] is None and slots[0] is not None and ms > slots[0]:
-                        slots[1] = ms
-                elif et == _FUNNEL_STAGES[2]:
-                    if slots[2] is None and slots[1] is not None and ms > slots[1]:
-                        slots[2] = ms
-                out.append(
-                    {
-                        "user_id": int(user_id),
-                        "event_id": int(eid),
-                        "stage_depth": sum(s is not None for s in slots),
-                        "signup_ms": slots[0],
-                        "first_view_ms": slots[1],
-                        "first_purchase_ms": slots[2],
-                    }
-                )
-        state.update(tuple(slots))
-        yield pd.DataFrame(out, columns=[f.name for f in FUNNEL_OUTPUT_SCHEMA])
-
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=FUNNEL_OUTPUT_SCHEMA,
-            stateStructType=T.StructType(
-                [
-                    T.StructField("t1", T.LongType()),
-                    T.StructField("t2", T.LongType()),
-                    T.StructField("t3", T.LongType()),
-                ]
-            ),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_groups(
+        events.select("user_id", "event_id", "ts", "event_type"),
+        "user_id",
+        fold,
+        FUNNEL_OUTPUT_SCHEMA,
+        T.StructType(
+            [
+                T.StructField("t1", T.LongType()),
+                T.StructField("t2", T.LongType()),
+                T.StructField("t3", T.LongType()),
+            ]
+        ),
+        (None, None, None),
+        order=("ts", "event_id"),
     )
 
 
@@ -568,73 +488,46 @@ def streaming_twap(events: DataFrame) -> DataFrame:
     ``streaming_ewma``.
     """
 
-    def fn(
-        key: tuple[int],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
+    def fold(key, state, pdf):
         from decimal import ROUND_HALF_UP, Decimal
         from fractions import Fraction
 
-        import pandas as pd
+        user_id = int(key[0])
+        prev_ms, prev_vfp, acc, sum_dt, n_iv = state
+        rows = []
+        for eid, ts, value in zip(pdf["event_id"], pdf["ts"], pdf["value"]):
+            ms = int(ts.value // 1_000_000)
+            vfp = int(
+                Decimal(repr(float(value)))
+                .scaleb(4)
+                .to_integral_value(rounding=ROUND_HALF_UP)
+            )
+            if prev_ms is not None:
+                dt = ms - prev_ms
+                acc += prev_vfp * dt
+                sum_dt += dt
+                n_iv += 1
+            prev_ms, prev_vfp = ms, vfp
+            twap = float(Fraction(acc, 10000)) / float(sum_dt) if sum_dt > 0 else None
+            rows.append((user_id, int(eid), n_iv, sum_dt, twap))
+        return (prev_ms, prev_vfp, acc, sum_dt, n_iv), rows
 
-        (user_id,) = key
-        if state.exists:
-            prev_ms, prev_vfp, acc, sum_dt, n_iv = state.get
-        else:
-            prev_ms = prev_vfp = None
-            acc = sum_dt = n_iv = 0
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for eid, ts, value in zip(pdf["event_id"], pdf["ts"], pdf["value"]):
-                ms = int(ts.value // 1_000_000)
-                vfp = int(
-                    Decimal(repr(float(value)))
-                    .scaleb(4)
-                    .to_integral_value(rounding=ROUND_HALF_UP)
-                )
-                if prev_ms is not None:
-                    dt = ms - prev_ms
-                    acc += prev_vfp * dt
-                    sum_dt += dt
-                    n_iv += 1
-                prev_ms, prev_vfp = ms, vfp
-                twap = (
-                    float(Fraction(acc, 10000)) / float(sum_dt)
-                    if sum_dt > 0
-                    else None
-                )
-                out.append(
-                    {
-                        "user_id": int(user_id),
-                        "event_id": int(eid),
-                        "n_intervals": n_iv,
-                        "span_ms": sum_dt,
-                        "twap": twap,
-                    }
-                )
-        state.update((prev_ms, prev_vfp, acc, sum_dt, n_iv))
-        yield pd.DataFrame(out, columns=[f.name for f in TWAP_OUTPUT_SCHEMA])
-
-    return (
-        events.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=TWAP_OUTPUT_SCHEMA,
-            stateStructType=T.StructType(
-                [
-                    T.StructField("prev_ms", T.LongType()),
-                    T.StructField("prev_vfp", T.LongType()),
-                    T.StructField("acc", T.LongType()),
-                    T.StructField("sum_dt", T.LongType()),
-                    T.StructField("n_iv", T.LongType()),
-                ]
-            ),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_groups(
+        events.select("user_id", "event_id", "ts", "value"),
+        "user_id",
+        fold,
+        TWAP_OUTPUT_SCHEMA,
+        T.StructType(
+            [
+                T.StructField("prev_ms", T.LongType()),
+                T.StructField("prev_vfp", T.LongType()),
+                T.StructField("acc", T.LongType()),
+                T.StructField("sum_dt", T.LongType()),
+                T.StructField("n_iv", T.LongType()),
+            ]
+        ),
+        (None, None, 0, 0, 0),
+        order=("ts", "event_id"),
     )
 
 
@@ -679,73 +572,48 @@ def streaming_theil_sen(events: DataFrame) -> DataFrame:
     ``streaming_ewma``.
     """
 
-    def fn(
-        key: tuple[int],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def fold(key, state, pdf):
+        user_id = int(key[0])
+        tms, vals, n_seen = list(state[0]), list(state[1]), state[2]
+        rows = []
+        for eid, ts, value in zip(pdf["event_id"], pdf["ts"], pdf["value"]):
+            ms = int(ts.value // 1_000_000)
+            tms.append(ms)
+            vals.append(float(value))
+            n_seen += 1
+            if len(tms) > THEIL_SEN_WINDOW:
+                tms.pop(0)
+                vals.pop(0)
+            slopes = []
+            for i in range(len(tms)):
+                for j in range(i + 1, len(tms)):
+                    if tms[i] != tms[j]:
+                        slopes.append(
+                            (vals[j] - vals[i]) / ((tms[j] - tms[i]) / 3600000.0)
+                        )
+            n = len(slopes)
+            if n:
+                slopes.sort()
+                med = slopes[(n + 1) // 2 - 1]
+            else:
+                med = None
+            rows.append((user_id, int(eid), n_seen, n, med))
+        return (tms, vals, n_seen), rows
 
-        (user_id,) = key
-        if state.exists:
-            tms_arr, val_arr, n_seen = state.get
-            tms = list(tms_arr)
-            vals = list(val_arr)
-        else:
-            tms, vals, n_seen = [], [], 0
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for eid, ts, value in zip(pdf["event_id"], pdf["ts"], pdf["value"]):
-                ms = int(ts.value // 1_000_000)
-                tms.append(ms)
-                vals.append(float(value))
-                n_seen += 1
-                if len(tms) > THEIL_SEN_WINDOW:
-                    tms.pop(0)
-                    vals.pop(0)
-                slopes = []
-                for i in range(len(tms)):
-                    for j in range(i + 1, len(tms)):
-                        if tms[i] != tms[j]:
-                            slopes.append(
-                                (vals[j] - vals[i])
-                                / ((tms[j] - tms[i]) / 3600000.0)
-                            )
-                n = len(slopes)
-                if n:
-                    slopes.sort()
-                    med = slopes[(n + 1) // 2 - 1]
-                else:
-                    med = None
-                out.append(
-                    {
-                        "user_id": int(user_id),
-                        "event_id": int(eid),
-                        "n_seen": n_seen,
-                        "n_pairs": n,
-                        "theil_sen_slope": med,
-                    }
-                )
-        state.update((tms, vals, n_seen))
-        yield pd.DataFrame(out, columns=[f.name for f in THEIL_SEN_OUTPUT_SCHEMA])
-
-    return (
-        events.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=THEIL_SEN_OUTPUT_SCHEMA,
-            stateStructType=T.StructType(
-                [
-                    T.StructField("tms", T.ArrayType(T.LongType())),
-                    T.StructField("vals", T.ArrayType(T.DoubleType())),
-                    T.StructField("n_seen", T.LongType()),
-                ]
-            ),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_groups(
+        events.select("user_id", "event_id", "ts", "value"),
+        "user_id",
+        fold,
+        THEIL_SEN_OUTPUT_SCHEMA,
+        T.StructType(
+            [
+                T.StructField("tms", T.ArrayType(T.LongType())),
+                T.StructField("vals", T.ArrayType(T.DoubleType())),
+                T.StructField("n_seen", T.LongType()),
+            ]
+        ),
+        ([], [], 0),
+        order=("ts", "event_id"),
     )
 
 
@@ -811,75 +679,40 @@ def streaming_ohlc(events: DataFrame) -> DataFrame:
     Input columns: ``event_type``, ``event_id``, ``ts``, ``value``.
     """
 
-    def fn(
-        key: tuple[str, int],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
+    def fold(key, state, pdf):
         from decimal import ROUND_HALF_UP, Decimal
 
-        import pandas as pd
-
         event_type, bar_ms = key
-        if state.exists:
-            (o_ms, o_eid, o_v, c_ms, c_eid, c_v, hi, lo, n, vol) = state.get
-        else:
-            o_ms = o_eid = o_v = c_ms = c_eid = c_v = hi = lo = None
-            n, vol = 0, 0
-        for pdf in pdfs:
-            for eid, ms, v in zip(
-                pdf["event_id"], pdf["ms"], pdf["value"]
-            ):
-                eid, ms, v = int(eid), int(ms), float(v)
-                if o_ms is None or (ms, eid) < (o_ms, o_eid):
-                    o_ms, o_eid, o_v = ms, eid, v
-                if c_ms is None or (ms, eid) > (c_ms, c_eid):
-                    c_ms, c_eid, c_v = ms, eid, v
-                hi = v if hi is None or v > hi else hi
-                lo = v if lo is None or v < lo else lo
-                n += 1
-                vol += int(
-                    Decimal(v * 10000.0).quantize(
-                        Decimal(1), rounding=ROUND_HALF_UP
-                    )
-                )
-        state.update((o_ms, o_eid, o_v, c_ms, c_eid, c_v, hi, lo, n, vol))
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": event_type,
-                    "bar_ms": int(bar_ms),
-                    "open": o_v,
-                    "high": hi,
-                    "low": lo,
-                    "close": c_v,
-                    "n_events": n,
-                    "volume_e4": vol,
-                }
-            ],
-            columns=[f.name for f in OHLC_OUTPUT_SCHEMA],
-        )
+        o_ms, o_eid, o_v, c_ms, c_eid, c_v, hi, lo, n, vol = state
+        for eid, ms, v in zip(pdf["event_id"], pdf["ms"], pdf["value"]):
+            eid, ms, v = int(eid), int(ms), float(v)
+            if o_ms is None or (ms, eid) < (o_ms, o_eid):
+                o_ms, o_eid, o_v = ms, eid, v
+            if c_ms is None or (ms, eid) > (c_ms, c_eid):
+                c_ms, c_eid, c_v = ms, eid, v
+            hi = v if hi is None or v > hi else hi
+            lo = v if lo is None or v < lo else lo
+            n += 1
+            vol += int(Decimal(v * 10000.0).quantize(Decimal(1), rounding=ROUND_HALF_UP))
+        new_state = (o_ms, o_eid, o_v, c_ms, c_eid, c_v, hi, lo, n, vol)
+        return new_state, [(event_type, int(bar_ms), o_v, hi, lo, c_v, n, vol)]
 
     from pyspark.sql import functions as F
 
-    return (
+    return _fold_groups(
         events.select(
             "event_type",
-            (
-                F.unix_millis(F.date_trunc("hour", F.col("ts")))
-            ).alias("bar_ms"),
+            F.unix_millis(F.date_trunc("hour", F.col("ts"))).alias("bar_ms"),
             "event_id",
             F.unix_millis(F.col("ts")).alias("ms"),
             "value",
-        )
-        .groupBy("event_type", "bar_ms")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=OHLC_OUTPUT_SCHEMA,
-            stateStructType=OHLC_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ),
+        ["event_type", "bar_ms"],
+        fold,
+        OHLC_OUTPUT_SCHEMA,
+        OHLC_STATE_SCHEMA,
+        (None,) * 8 + (0, 0),
+        mode="update",
     )
 
 
@@ -934,45 +767,28 @@ def streaming_hll(events: DataFrame, output_mode: str = "update") -> DataFrame:
         hll_znum,
     )
 
-    def fn(
-        key: tuple[str],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        (event_type,) = key
-        regs = list(state.get[0]) if state.exists else [0] * HLL_M
-        for pdf in pdfs:
-            for bucket, rho in zip(pdf["bucket"], pdf["rho"]):
-                b, r = int(bucket), int(rho)
-                if r > regs[b]:
-                    regs[b] = r
-        state.update((regs,))
+    def fold(key, state, pdf):
+        regs = list(state[0])
+        for bucket, rho in zip(pdf["bucket"], pdf["rho"]):
+            b, r = int(bucket), int(rho)
+            if r > regs[b]:
+                regs[b] = r
         z = hll_znum(regs)
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": event_type,
-                    "n_buckets": sum(1 for m in regs if m > 0),
-                    "z_num": z,
-                    "hll_estimate": hll_estimate_from_znum(z),
-                }
-            ],
-            columns=[f.name for f in HLL_OUTPUT_SCHEMA],
-        )
+        n_buckets = sum(1 for m in regs if m > 0)
+        return (regs,), [(key[0], n_buckets, z, hll_estimate_from_znum(z))]
 
-    projected = hll_bucket_rho(events, HLL_KEY_SQL_DEFAULT, "event_type")
     # output_mode: "update" for live dashboards (memory/console sinks);
     # "append" when the snapshots land in an append-only log (parquet) —
     # each emission is a self-contained register summary either way, and
     # the reader picks the latest by the monotone (n_buckets, -z_num).
-    return projected.groupBy("event_type").applyInPandasWithState(
-        fn,
-        outputStructType=HLL_OUTPUT_SCHEMA,
-        stateStructType=HLL_STATE_SCHEMA,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_groups(
+        hll_bucket_rho(events, HLL_KEY_SQL_DEFAULT, "event_type"),
+        "event_type",
+        fold,
+        HLL_OUTPUT_SCHEMA,
+        HLL_STATE_SCHEMA,
+        ([0] * HLL_M,),
+        mode=output_mode,
     )
 
 
@@ -1059,54 +875,27 @@ def streaming_holt_winters(events: DataFrame) -> DataFrame:
     micro-batch.
     """
 
-    def fn(
-        key: tuple[int],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def fold(key, state, pdf):
+        user_id = int(key[0])
+        vals, n_seen = list(state[0]), state[1]
+        rows = []
+        for eid, value in zip(pdf["event_id"], pdf["value"]):
+            vals.append(float(value))
+            if len(vals) > HW_WINDOW:
+                vals.pop(0)
+            n_seen += 1
+            smoothed = _hw_fold(vals) or (None,) * 4
+            rows.append((user_id, int(eid), n_seen, len(vals), *smoothed))
+        return (vals, n_seen), rows
 
-        (user_id,) = key
-        if state.exists:
-            vals_arr, n_seen = state.get
-            vals = list(vals_arr)
-        else:
-            vals, n_seen = [], 0
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for eid, value in zip(pdf["event_id"], pdf["value"]):
-                vals.append(float(value))
-                if len(vals) > HW_WINDOW:
-                    vals.pop(0)
-                n_seen += 1
-                folded = _hw_fold(vals)
-                l, b, season_next, forecast_1 = folded or (None,) * 4
-                out.append(
-                    {
-                        "user_id": int(user_id),
-                        "event_id": int(eid),
-                        "n_seen": n_seen,
-                        "n_samples": len(vals),
-                        "level": l,
-                        "trend": b,
-                        "season_next": season_next,
-                        "forecast_1": forecast_1,
-                    }
-                )
-        state.update((vals, n_seen))
-        yield pd.DataFrame(out, columns=[f.name for f in HW_OUTPUT_SCHEMA])
-
-    return (
-        events.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=HW_OUTPUT_SCHEMA,
-            stateStructType=HW_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _fold_groups(
+        events.select("user_id", "event_id", "ts", "value"),
+        "user_id",
+        fold,
+        HW_OUTPUT_SCHEMA,
+        HW_STATE_SCHEMA,
+        ([], 0),
+        order=("ts", "event_id"),
     )
 
 
@@ -1167,39 +956,23 @@ def streaming_cms(events: DataFrame, output_mode: str = "update") -> DataFrame:
         cms_j_bucket,
     )
 
-    def fn(
-        key: tuple[int],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        (j,) = key
-        cells = list(state.get[0]) if state.exists else [0] * CMS_WIDTH
-        for pdf in pdfs:
-            for bucket, cnt in pdf["bucket"].value_counts().items():
-                cells[int(bucket)] += int(cnt)
-        state.update((cells,))
-        yield pd.DataFrame(
-            [
-                {
-                    "j": j,
-                    "n_nonzero": sum(1 for c in cells if c > 0),
-                    "total_mass": sum(cells),
-                    "cells": cells,
-                }
-            ],
-            columns=[f.name for f in CMS_OUTPUT_SCHEMA],
-        )
+    def fold(key, state, pdf):
+        cells = list(state[0])
+        for bucket, cnt in pdf["bucket"].value_counts().items():
+            cells[int(bucket)] += int(cnt)
+        n_nonzero = sum(1 for c in cells if c > 0)
+        return (cells,), [(key[0], n_nonzero, sum(cells), cells)]
 
     projected = cms_j_bucket(
         events.filter(F.col("event_type") == "click").select("user_id"),
         "user_id",
     ).select("j", "bucket")
-    return projected.groupBy("j").applyInPandasWithState(
-        fn,
-        outputStructType=CMS_OUTPUT_SCHEMA,
-        stateStructType=CMS_STATE_SCHEMA,
-        outputMode=output_mode,
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_groups(
+        projected,
+        "j",
+        fold,
+        CMS_OUTPUT_SCHEMA,
+        CMS_STATE_SCHEMA,
+        ([0] * CMS_WIDTH,),
+        mode=output_mode,
     )

@@ -8,8 +8,12 @@ arithmetic.
 
 from __future__ import annotations
 
+import datetime
+
+import pytest
 from pyspark.sql import functions as F
 
+from iot_sparkstreaming_spark.streaming import stateful
 from iot_sparkstreaming_spark.streaming.stateful import (
     stateful_latest_location,
     warning_streaks,
@@ -1244,3 +1248,72 @@ def test_streaming_session_window_state_survives_restart(spark, tmp_path):
     }
     assert len(got) == len(emitted), "append mode re-emitted a session"
     assert got == _session_batch_rows(spark)
+
+
+def _streaks_of_events(ev):
+    """The events as a warning stream: clicks reset the streak."""
+    return warning_streaks(
+        ev.select(
+            F.col("user_id").cast("string").alias("user_id"),
+            F.when(F.col("event_type") == "click", "no-use")
+            .otherwise(F.col("event_type"))
+            .alias("warning"),
+            F.unix_millis("ts").cast("string").alias("machine_timestamp"),
+        )
+    )
+
+
+ORDERED_OPERATORS = {
+    "warning_streaks": _streaks_of_events,
+    "streaming_ewma": stateful.streaming_ewma,
+    "streaming_transitions": stateful.streaming_transitions,
+    "streaming_coverage": stateful.streaming_coverage,
+    "streaming_funnel": stateful.streaming_funnel,
+    "streaming_twap": stateful.streaming_twap,
+    "streaming_theil_sen": stateful.streaming_theil_sen,
+    "streaming_holt_winters": stateful.streaming_holt_winters,
+}
+
+
+@pytest.mark.parametrize("name", sorted(ORDERED_OPERATORS))
+def test_ordered_operator_ignores_arrow_chunking(spark, tmp_path, name):
+    """An order-sensitive operator folds a key's WHOLE micro-batch in
+    event order: with every key's rows arriving newest first in one
+    micro-batch, Arrow chunks of 2 rows must give the same output as
+    the default chunk size (sorting each chunk on its own would not)."""
+    op = ORDERED_OPERATORS[name]
+    base = datetime.datetime(2024, 1, 1)
+    kinds = ["signup", "view", "view", "purchase", "click", "purchase", "view"]
+    rows = [
+        (u, 100 * u + k, base + datetime.timedelta(minutes=7 * k + u), kinds[k],
+         float(k * k % 5) + 0.25 * u)
+        for u in (1, 2, 3)
+        for k in reversed(range(len(kinds)))
+    ]
+    schema = "user_id BIGINT, event_id BIGINT, ts TIMESTAMP, event_type STRING, value DOUBLE"
+    src = tmp_path / "in"
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src))
+
+    def run(tag):
+        table = f"chunking_{name}_{tag}"
+        q = (
+            op(spark.readStream.schema(schema).parquet(str(src)))
+            .writeStream.format("memory")
+            .queryName(table)
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{tag}"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return sorted(map(tuple, spark.sql(f"SELECT * FROM {table}").collect()))
+
+    whole = run("default")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        chunked = run("chunked")
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert whole and chunked == whole

@@ -19,10 +19,13 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
 
 SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import SparkSession
 
 # The driver's posture: no engine configs whatsoever.
@@ -61,7 +64,7 @@ spark.stop()
 
 def test_queries_run_on_vanilla_session():
     proc = subprocess.run(
-        [sys.executable, "-c", SCRIPT],
+        [sys.executable, "-c", SCRIPT, str(REPO)],
         capture_output=True,
         text=True,
         timeout=600,

@@ -1,18 +1,29 @@
-"""Focused oracle-parity check: ``python tools/check_queries.py name [name ...]``
+"""Oracle-parity check through the ``__spark_entry__`` contract.
 
-Same comparator as driver_sim (repr-hash after column-name sort), but
-only for the named queries — the fast inner loop while building a new
-operator. ``--vanilla`` uses the bare-session posture.
+``python tools/check_queries.py`` runs the ``entry()`` smoke check and
+every ``queries()`` entry against its ``oracle_sql()`` twin in DuckDB
+(repr-hash after column-name sort); ``python tools/check_queries.py
+name [name ...]`` checks only the named queries — the fast inner loop
+while building a new operator. ``--vanilla`` builds a bare
+SparkSession with ZERO engine configs, the external driver's posture
+(this caught the round-1 nanosAsLong bug). Prints one line per query
+and ``FAILURES: N``.
 """
 import datetime
 import decimal
 import hashlib
+import importlib.util
 import os
 import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from pathlib import Path
 
 import duckdb
+
+spec = importlib.util.spec_from_file_location(
+    "__spark_entry__", Path(__file__).resolve().parents[1] / "__spark_entry__.py"
+)
+entry_mod = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(entry_mod)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -27,9 +38,11 @@ else:
     spark = get_spark("check-queries")
 spark.sparkContext.setLogLevel("ERROR")
 
-from iot_sparkstreaming_spark.queries.registry import load_all
+if not names:
+    df = entry_mod.entry(spark)
+    print("ENTRY OK rows=", len(df.collect()), "schema=", [f.name for f in df.schema])
 
-registry = load_all()
+queries, oracles = entry_mod.queries(), entry_mod.oracle_sql()
 con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
@@ -51,14 +64,13 @@ def norm(v):
 
 
 fail = 0
-for name in names:
-    q = registry[name]
-    sdf = q.spark(spark, SF_DIR)
+for name in names or sorted(queries):
+    sdf = queries[name](spark, SF_DIR)
     srows = [tuple(norm(v) for v in r) for r in sdf.collect()]
-    if q.oracle is None:
+    if name not in oracles:
         print(f"{name}: NO-ORACLE rows={len(srows)}")
         continue
-    res = con.execute(q.oracle)
+    res = con.execute(oracles[name])
     dcols = [d[0] for d in res.description]
     drows = [tuple(norm(v) for v in r) for r in res.fetchall()]
     hs, hd = vhash(sdf.columns, srows), vhash(dcols, drows)

@@ -4,9 +4,9 @@ reference's Cassandra write semantics as a first-class
 
 The reference wrote every keyed table with the Cassandra INSERT path
 — same primary key overwrites the row (``workingTest.scala:103-133``:
-``user_details``, ``latest_location``, ``sales``). ``io/sinks.py``
-and ``streaming/sinks.py`` already twin those semantics per-pipeline
-via ``foreachBatch``; this module lifts them into the DataSource V2
+``user_details``, ``latest_location``, ``sales``).
+``streaming/sinks.py`` already twins those semantics per-pipeline via
+``foreachBatch``; this module lifts them into the DataSource V2
 writer protocol, so ANY DataFrame can be written with upsert
 semantics through the standard writer API:
 
@@ -36,7 +36,7 @@ removes the per-call re-read of ``pyspark.zip`` and the Spark core jar
 
 ``mode("append")`` upserts into the existing table state;
 ``mode("overwrite")`` replaces it. Scale honesty, same caveat as
-``io/sinks.py``: the driver-side merge is the CI twin of a real
+``streaming/sinks.py``: the driver-side merge is the CI twin of a real
 keyed store (Cassandra/HBase/Delta MERGE) — keyed dimension tables
 are small by construction; the fact-table path at 100 TB is the
 partitioned-parquet writers, not this.

@@ -28,42 +28,85 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql import types as T
 
 
-class KeyedUpsertSink:
+class _ParquetTable:
+    """A keyed parquet table under ``state_dir``. Its schema is read
+    from the files once per sink object (or taken from the first rows
+    written), not inferred by a Spark job on every batch."""
+
+    def __init__(self, state_dir: str, keys: list[str]):
+        self.state_dir = state_dir
+        self.keys = keys
+        self._schema: T.StructType | None = None
+
+    def _stored(self, rows: DataFrame) -> DataFrame | None:
+        """The stored table, None before the first write. Raises if
+        its schema differs from the schema of ``rows``."""
+        if not (
+            os.path.isdir(self.state_dir)
+            and any(f.endswith(".parquet") for f in os.listdir(self.state_dir))
+        ):
+            return None
+        read = rows.sparkSession.read
+        if self._schema is None:
+            self._schema = read.parquet(self.state_dir).schema
+        if _columns(self._schema) != _columns(rows.schema):
+            raise ValueError(
+                f"{self.state_dir} holds {self._schema.simpleString()}, "
+                f"the batch has {rows.schema.simpleString()}"
+            )
+        return read.schema(self._schema).parquet(self.state_dir)
+
+    def _wrote(self, rows: DataFrame) -> None:
+        if self._schema is None:
+            self._schema = rows.schema
+
+    def read_state(self, spark) -> DataFrame:
+        return spark.read.parquet(self.state_dir)
+
+
+def _columns(schema: T.StructType) -> dict[str, str]:
+    """Column name → type, nullability aside: parquet reads every
+    column back as nullable."""
+    return {f.name: f.dataType.simpleString() for f in schema}
+
+
+def _expand(rows: DataFrame, keys: list[str], agg: Column) -> DataFrame:
+    """One row per key: ``agg`` over a struct of the other columns,
+    expanded back into the columns of ``rows``, in their order."""
+    return (
+        rows.groupBy(*keys)
+        .agg(agg.alias("__w"))
+        .select(*[c if c in keys else F.col("__w").getField(c).alias(c) for c in rows.columns])
+    )
+
+
+class KeyedUpsertSink(_ParquetTable):
     """``foreachBatch`` upsert: keep, per key, the row with the
     greatest ``order_by`` tuple (event-time first, then a unique
-    tie-break) across all batches seen so far.
+    tie-break) across all batches seen so far. Rows that tie on
+    ``order_by`` are ordered by their remaining columns, so the winner
+    never depends on arrival order.
 
     Deterministic and replay-idempotent: state is the argmax over
     data seen, regardless of batch boundaries or arrival order.
     """
 
     def __init__(self, state_dir: str, keys: list[str], order_by: list[str]):
-        self.state_dir = state_dir
-        self.keys = keys
+        super().__init__(state_dir, keys)
         self.order_by = order_by
 
     def _merge(self, new_rows: DataFrame) -> DataFrame:
-        spark = new_rows.sparkSession
-        if os.path.isdir(self.state_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(self.state_dir)
-        ):
-            old = spark.read.parquet(self.state_dir)
-            merged = old.unionByName(new_rows)
-        else:
-            merged = new_rows
-        w = Window.partitionBy(*self.keys).orderBy(
-            *[F.col(c).desc() for c in self.order_by]
-        )
-        return (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        old = self._stored(new_rows)
+        merged = new_rows if old is None else old.unionByName(new_rows)
+        rest = [c for c in merged.columns if c not in self.keys and c not in self.order_by]
+        # one aggregate instead of a row_number window: max over the
+        # struct compares order_by first, then the remaining columns
+        return _expand(merged, self.keys, F.max(F.struct(*self.order_by, *rest)))
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         merged = self._merge(batch_df)
@@ -84,30 +127,22 @@ class KeyedUpsertSink:
         os.replace(tmp, self.state_dir)
         if os.path.isdir(old):
             shutil.rmtree(old)
-
-    def read_state(self, spark) -> DataFrame:
-        return spark.read.parquet(self.state_dir)
+        self._wrote(merged)
 
 
-class AppendDedupSink:
+class AppendDedupSink(_ParquetTable):
     """``foreachBatch`` append with PK dedup (K3 ``userhistory``):
     identical-key rows collapse to one, both within a batch and
     against previously appended state — the parquet twin of
-    Cassandra's idempotent keyed INSERT."""
-
-    def __init__(self, state_dir: str, keys: list[str]):
-        self.state_dir = state_dir
-        self.keys = keys
+    Cassandra's idempotent keyed INSERT. Of the rows sharing a key
+    within one batch, the one whose other columns are least is kept,
+    whatever their order."""
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fresh = batch_df.dropDuplicates(self.keys)
-        if os.path.isdir(self.state_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(self.state_dir)
-        ):
-            seen = spark.read.parquet(self.state_dir).select(*self.keys)
-            fresh = fresh.join(seen, self.keys, "left_anti")
+        rest = [c for c in batch_df.columns if c not in self.keys]
+        fresh = _expand(batch_df, self.keys, F.min(F.struct(*rest)))
+        seen = self._stored(batch_df)
+        if seen is not None:
+            fresh = fresh.join(seen.select(*self.keys), self.keys, "left_anti")
         fresh.write.mode("append").parquet(self.state_dir)
-
-    def read_state(self, spark) -> DataFrame:
-        return spark.read.parquet(self.state_dir)
+        self._wrote(fresh)

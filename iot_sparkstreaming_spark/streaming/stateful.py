@@ -4,21 +4,34 @@ The reference's only state lived in Cassandra primary keys (SURVEY.md
 §2.6); cross-row SEQUENCE state (streaks, per-key running latest) has
 no home there and no SQL/window equivalent in a stream. These
 operators hold that state in Spark's streaming state store —
-checkpointed, partitioned by key, recovered on restart.
-
-Scale posture: state is per-key and O(1) per key (a few scalars), so
-the store scales with distinct keys, not events; partitioning is the
-group-by key hash — the same shuffle the aggregation would need
-anyway.
+checkpointed, partitioned by key hash, recovered on restart.
 
 Every operator is a per-key fold run by :func:`_fold_groups`, the one
-place that speaks the ``applyInPandasWithState`` protocol. It
-concatenates every Arrow chunk of a key's micro-batch into one frame
-and, for the order-sensitive operators, sorts it once by event time
-(stable), so results are deterministic given batch boundaries and do
-not depend on ``spark.sql.execution.arrow.maxRecordsPerBatch``.
+place that speaks the ``applyInPandasWithState`` protocol. Spark does
+not group by the key but by its bucket, ``pmod(xxhash64(key...),
+BUCKETS)``: one Python call per bucket and micro-batch, and one state
+row per bucket, ``(keys: array<key struct>, states: array<state>)``.
+Inside the call ``_fold_groups`` groups the rows by key, sorts each key's
+rows once by event time (stable, nulls last) for the order-sensitive
+operators, and runs the fold per key with that key's stored state —
+so results are deterministic given batch boundaries and do not depend
+on ``spark.sql.execution.arrow.maxRecordsPerBatch``. Null keys form
+one key, as Spark groups them.
 
-``_fold_groups`` is also the one place that sets the timeout:
+Why buckets: PySpark's per-group protocol (state JSON, pickling, an
+Arrow slice and a pandas frame per group) costs about a millisecond
+per group, more than most folds do. The trade-off: a micro-batch
+rewrites the whole state row of every bucket it touches, so this
+layout loses when few keys out of many are active in a batch; and the
+stateful stage runs at most ``BUCKETS`` groups in parallel. The
+bucket of a key is part of the checkpoint: xxhash64 (seed 42) and
+``BUCKETS`` must stay as they are, or restored state lands in the
+wrong bucket. Changing the state layout breaks checkpoint restore —
+Spark's state-schema check rejects a checkpoint written per key.
+
+State is O(1) or bounded per key (a few scalars, at most a
+fixed-length window), so the store scales with distinct keys, not
+events. ``_fold_groups`` is also the one place that sets the timeout:
 GroupStateTimeout.NoTimeout, which keeps per-key state forever — a
 real deployment with unbounded key cardinality would need event-time
 timeouts (and ``state.hasTimedOut`` handling there) to expire idle
@@ -27,10 +40,12 @@ keys.
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Callable, Iterator
 from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -38,27 +53,53 @@ if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
 
+#: Hash buckets every operator's keys are spread over. The state store
+#: holds one row per bucket, and one Python call folds a whole bucket.
+BUCKETS = 64
+
+
+def _null(v: Any) -> bool:
+    """None, NaN or NaT: the nulls of a pandas column's ``tolist()``."""
+    return v is None or v != v
+
+
 def _fold_groups(
     frame: DataFrame,
     by: str | list[str],
-    fold: Callable[[tuple, tuple, pd.DataFrame], tuple[tuple, list[tuple]]],
+    fold: Callable[[tuple, tuple, dict[str, list]], tuple[tuple, list[tuple]]],
     out_schema: T.StructType,
     state_schema: T.StructType,
     init: tuple[Any, ...],
     order: tuple[str, ...] = (),
     mode: str = "append",
 ) -> DataFrame:
-    """Group ``frame`` by ``by`` and run ``fold(key, state, pdf)`` once
-    per key per micro-batch. ``pdf`` holds all of the key's rows in the
-    micro-batch, stably sorted by ``order`` when given; ``state`` is
-    the stored state tuple, or ``init`` for a new key (shared by every
-    new key in a worker, so ``fold`` must not mutate it). ``fold``
-    returns ``(new_state, rows)``, each row a tuple in ``out_schema``
-    order."""
-    cols = [f.name for f in out_schema]
+    """Group ``frame`` by ``by`` and run ``fold(key, state, cols)`` once
+    per key per micro-batch. ``cols`` maps each column of ``frame`` to
+    the key's values in the micro-batch, stably sorted by ``order``
+    (nulls last) when given; ``state`` is the stored state tuple, or
+    ``init`` for a new key (shared by every new key in a worker, so
+    ``fold`` must not mutate it). ``fold`` returns ``(new_state,
+    rows)``, each row a tuple in ``out_schema`` order.
+
+    Spark groups by the key's bucket, not by the key: the state row of
+    a bucket is ``(keys, states)``, two parallel arrays."""
+    by = [by] if isinstance(by, str) else list(by)
+    key_fields = [frame.schema[c] for c in by]
+    bucket_state = T.StructType(
+        [
+            T.StructField(
+                "keys",
+                T.ArrayType(T.StructType([T.StructField(f.name, f.dataType) for f in key_fields])),
+            ),
+            T.StructField("states", T.ArrayType(state_schema)),
+        ]
+    )
+    # Arrow hands a bigint column with nulls to pandas as float64
+    integral = [isinstance(f.dataType, T.IntegralType) for f in key_fields]
+    out_cols = [f.name for f in out_schema]
 
     def fn(
-        key: tuple,
+        bucket: tuple,
         pdfs: Iterator["pd.DataFrame"],
         state: GroupState,
     ) -> Iterator["pd.DataFrame"]:
@@ -66,16 +107,37 @@ def _fold_groups(
 
         chunks = list(pdfs)  # usually one: concat would only copy it
         pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        if order:
-            pdf = pdf.sort_values(list(order), kind="mergesort")
-        new_state, rows = fold(key, state.get if state.exists else init, pdf)
-        state.update(new_state)
-        yield pd.DataFrame(rows, columns=cols)
+        cols = {c: pdf[c].tolist() for c in pdf.columns if c != "__bucket"}
+        key_cols = [
+            [None if _null(v) else int(v) if i else v for v in cols[c]]
+            for c, i in zip(by, integral)
+        ]
+        groups: dict[tuple, list[int]] = {}
+        for row, key in enumerate(zip(*key_cols)):
+            groups.setdefault(key, []).append(row)
+        if order:  # per row, a sort key with nulls last, as pandas sorts
+            rank = list(
+                zip(*([(True, 0) if _null(v) else (False, v) for v in cols[c]] for c in order))
+            )
+        stored = {}
+        if state.exists:
+            keys, states = state.get
+            stored = dict(zip(map(tuple, keys), map(tuple, states)))
+        rows: list[tuple] = []
+        for key, idx in groups.items():
+            if order:
+                idx.sort(key=rank.__getitem__)
+            key_rows = {c: [v[i] for i in idx] for c, v in cols.items()}
+            stored[key], out = fold(key, stored.get(key, init), key_rows)
+            rows.extend(out)
+        state.update((list(stored), list(stored.values())))
+        yield pd.DataFrame(rows, columns=out_cols)
 
-    return frame.groupBy(by).applyInPandasWithState(
+    bucket = F.pmod(F.xxhash64(*by), F.lit(BUCKETS))
+    return frame.withColumn("__bucket", bucket).groupBy("__bucket").applyInPandasWithState(
         fn,
         outputStructType=out_schema,
-        stateStructType=state_schema,
+        stateStructType=bucket_state,
         outputMode=mode,
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -122,13 +184,13 @@ def warning_streaks(
     equality this way.
     """
 
-    def fold(key, state, pdf):
+    def fold(key, state, cols):
         # output schema declares user_id:string; the grouping key keeps
         # the input's type (bigint for events-derived streams) — coerce.
         user_id = str(key[0])
         (streak,) = state
         rows = []
-        for w, ts in zip(pdf["warning"], pdf["machine_timestamp"]):
+        for w, ts in zip(cols["warning"], cols["machine_timestamp"]):
             streak = 0 if w == WARN_NONE else streak + 1
             if streak >= min_streak:
                 rows.append((user_id, streak, ts, w))
@@ -182,9 +244,9 @@ def stateful_latest_location(located: DataFrame) -> DataFrame:
     ``long`` (strings, per reference fidelity — SURVEY.md §1.2).
     """
 
-    def fold(key, state, pdf):
+    def fold(key, state, cols):
         best = state
-        for ms, la, lo in zip(pdf["event_millis"], pdf["lat"], pdf["long"]):
+        for ms, la, lo in zip(cols["event_millis"], cols["lat"], cols["long"]):
             if ms > best[0]:
                 best = (int(ms), la, lo)
         rows = [] if best is state else [(key[0], *best)]
@@ -223,8 +285,8 @@ def streaming_ewma(events: DataFrame) -> DataFrame:
     Twin parity (bitwise) is pinned by tests/test_stateful.py.
 
     State is O(16 bigints) per user (an array column in the state
-    row); partitioning is the groupBy hash — exactly the shuffle the
-    batch window needs. Rows are processed in (ts, event_id) order
+    row); partitioning is the key-bucket hash — the one shuffle the
+    batch window needs too. Rows are processed in (ts, event_id) order
     WITHIN each micro-batch; cross-batch order follows arrival, the
     streaming contract (the batch twin totally orders by event time —
     parity holds when feeds are in-order, e.g. replayed logs).
@@ -232,11 +294,11 @@ def streaming_ewma(events: DataFrame) -> DataFrame:
     Input columns: ``user_id``, ``event_id``, ``ts``, ``value``.
     """
 
-    def fold(key, state, pdf):
+    def fold(key, state, cols):
         user_id = int(key[0])
         tail = list(state[0])
         rows = []
-        for eid, val in zip(pdf["event_id"], pdf["value"]):
+        for eid, val in zip(cols["event_id"], cols["value"]):
             vc = int(round(float(val) * 10000))
             window = (tail + [vc])[-16:]
             m = len(window)
@@ -291,11 +353,11 @@ def streaming_transitions(events: DataFrame) -> DataFrame:
     Input columns: ``user_id``, ``event_id``, ``ts``, ``event_type``.
     """
 
-    def fold(key, state, pdf):
+    def fold(key, state, cols):
         user_id = int(key[0])
         (last,) = state
         rows = []
-        for eid, et in zip(pdf["event_id"], pdf["event_type"]):
+        for eid, et in zip(cols["event_id"], cols["event_type"]):
             if last is not None:
                 rows.append((user_id, last, et, int(eid)))
             last = et
@@ -341,11 +403,11 @@ def streaming_coverage(events: DataFrame, window_ms: int = 300 * 1000) -> DataFr
     Input columns: ``user_id``, ``event_id``, ``ts``.
     """
 
-    def fold(key, state, pdf):
+    def fold(key, state, cols):
         user_id = int(key[0])
         cur_s, cur_e, covered, n_iv, n_seg = state
         rows = []
-        for eid, ts in zip(pdf["event_id"], pdf["ts"]):
+        for eid, ts in zip(cols["event_id"], cols["ts"]):
             s = int(ts.value // 1_000_000)  # pandas Timestamp → epoch ms
             e = s + window_ms
             if cur_e is None or s >= cur_e:
@@ -410,11 +472,11 @@ def streaming_funnel(events: DataFrame) -> DataFrame:
     Input columns: ``user_id``, ``event_id``, ``ts``, ``event_type``.
     """
 
-    def fold(key, state, pdf):
+    def fold(key, state, cols):
         user_id = int(key[0])
         slots = list(state)
         rows = []
-        for eid, ts, et in zip(pdf["event_id"], pdf["ts"], pdf["event_type"]):
+        for eid, ts, et in zip(cols["event_id"], cols["ts"], cols["event_type"]):
             ms = int(ts.value // 1_000_000)
             if et == _FUNNEL_STAGES[0]:
                 if slots[0] is None:
@@ -488,14 +550,14 @@ def streaming_twap(events: DataFrame) -> DataFrame:
     ``streaming_ewma``.
     """
 
-    def fold(key, state, pdf):
+    def fold(key, state, cols):
         from decimal import ROUND_HALF_UP, Decimal
         from fractions import Fraction
 
         user_id = int(key[0])
         prev_ms, prev_vfp, acc, sum_dt, n_iv = state
         rows = []
-        for eid, ts, value in zip(pdf["event_id"], pdf["ts"], pdf["value"]):
+        for eid, ts, value in zip(cols["event_id"], cols["ts"], cols["value"]):
             ms = int(ts.value // 1_000_000)
             vfp = int(
                 Decimal(repr(float(value)))
@@ -566,17 +628,17 @@ def streaming_theil_sen(events: DataFrame) -> DataFrame:
     State is O({W}) per user (two parallel arrays + a monotone
     events-seen counter so consumers can identify the latest row
     without trusting event-id ordering), partitioned by
-    the group key — the same bounded-window discipline as the batch
+    the key's bucket — the same bounded-window discipline as the batch
     side, so the state store scales with distinct users only.
     In-order-feed contract within and across micro-batches, same as
     ``streaming_ewma``.
     """
 
-    def fold(key, state, pdf):
+    def fold(key, state, cols):
         user_id = int(key[0])
         tms, vals, n_seen = list(state[0]), list(state[1]), state[2]
         rows = []
-        for eid, ts, value in zip(pdf["event_id"], pdf["ts"], pdf["value"]):
+        for eid, ts, value in zip(cols["event_id"], cols["ts"], cols["value"]):
             ms = int(ts.value // 1_000_000)
             tms.append(ms)
             vals.append(float(value))
@@ -679,12 +741,12 @@ def streaming_ohlc(events: DataFrame) -> DataFrame:
     Input columns: ``event_type``, ``event_id``, ``ts``, ``value``.
     """
 
-    def fold(key, state, pdf):
+    def fold(key, state, cols):
         from decimal import ROUND_HALF_UP, Decimal
 
         event_type, bar_ms = key
         o_ms, o_eid, o_v, c_ms, c_eid, c_v, hi, lo, n, vol = state
-        for eid, ms, v in zip(pdf["event_id"], pdf["ms"], pdf["value"]):
+        for eid, ms, v in zip(cols["event_id"], cols["ms"], cols["value"]):
             eid, ms, v = int(eid), int(ms), float(v)
             if o_ms is None or (ms, eid) < (o_ms, o_eid):
                 o_ms, o_eid, o_v = ms, eid, v
@@ -696,8 +758,6 @@ def streaming_ohlc(events: DataFrame) -> DataFrame:
             vol += int(Decimal(v * 10000.0).quantize(Decimal(1), rounding=ROUND_HALF_UP))
         new_state = (o_ms, o_eid, o_v, c_ms, c_eid, c_v, hi, lo, n, vol)
         return new_state, [(event_type, int(bar_ms), o_v, hi, lo, c_v, n, vol)]
-
-    from pyspark.sql import functions as F
 
     return _fold_groups(
         events.select(
@@ -751,7 +811,7 @@ def streaming_hll(events: DataFrame, output_mode: str = "update") -> DataFrame:
     query), so parity here is a statement about register merging
     across micro-batch boundaries, not about replaying arithmetic in
     Python; only the trivial Z_num fold and the single bigint
-    floor-division run in the pandas fn (exact Python ints, the same
+    floor-division run in the Python fold (exact Python ints, the same
     formula both engines evaluate — hll_estimate_from_znum).
 
     State per key: 256 longs (2 KiB) — constant, never grows with
@@ -767,9 +827,9 @@ def streaming_hll(events: DataFrame, output_mode: str = "update") -> DataFrame:
         hll_znum,
     )
 
-    def fold(key, state, pdf):
+    def fold(key, state, cols):
         regs = list(state[0])
-        for bucket, rho in zip(pdf["bucket"], pdf["rho"]):
+        for bucket, rho in zip(cols["bucket"], cols["rho"]):
             b, r = int(bucket), int(rho)
             if r > regs[b]:
                 regs[b] = r
@@ -868,18 +928,18 @@ def streaming_holt_winters(events: DataFrame) -> DataFrame:
     fields (the batch side excludes those users entirely — consumers
     filter on ``n_samples >= 4`` for exact twin alignment).
 
-    State is O({W} doubles) per user, partitioned by the group key —
+    State is O({W} doubles) per user, partitioned by the key's bucket —
     the store scales with distinct users, not events. In-order-feed
     contract within and across micro-batches, same as
     ``streaming_ewma``; rows are sorted by (ts, event_id) inside each
     micro-batch.
     """
 
-    def fold(key, state, pdf):
+    def fold(key, state, cols):
         user_id = int(key[0])
         vals, n_seen = list(state[0]), state[1]
         rows = []
-        for eid, value in zip(pdf["event_id"], pdf["value"]):
+        for eid, value in zip(cols["event_id"], cols["value"]):
             vals.append(float(value))
             if len(vals) > HW_WINDOW:
                 vals.pop(0)
@@ -937,8 +997,8 @@ def streaming_cms(events: DataFrame, output_mode: str = "update") -> DataFrame:
     The key → (j, bucket) projection is the SHARED Spark-side
     ``cms_j_bucket`` expression from functions/sketch.py (also used by
     the batch query), so parity here is a statement about counter
-    merging, not about replaying xxhash64 in Python; the pandas fold
-    is one vectorized ``value_counts`` per micro-batch per row.
+    merging, not about replaying xxhash64 in Python; the fold is one
+    ``Counter`` per micro-batch per row.
 
     State per key: ``CMS_WIDTH`` longs (8 KiB) — constant, never grows
     with key cardinality, which is the entire reason sketches exist at
@@ -949,16 +1009,14 @@ def streaming_cms(events: DataFrame, output_mode: str = "update") -> DataFrame:
     Input columns: ``event_type``, ``user_id`` (clicks are counted,
     matching the batch query's grain).
     """
-    from pyspark.sql import functions as F
-
     from iot_sparkstreaming_spark.functions.sketch import (
         CMS_WIDTH,
         cms_j_bucket,
     )
 
-    def fold(key, state, pdf):
+    def fold(key, state, cols):
         cells = list(state[0])
-        for bucket, cnt in pdf["bucket"].value_counts().items():
+        for bucket, cnt in Counter(cols["bucket"]).items():
             cells[int(bucket)] += int(cnt)
         n_nonzero = sum(1 for c in cells if c > 0)
         return (cells,), [(key[0], n_nonzero, sum(cells), cells)]

@@ -1317,3 +1317,157 @@ def test_ordered_operator_ignores_arrow_chunking(spark, tmp_path, name):
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
     assert whole and chunked == whole
+
+
+def _users_in_null_key_bucket(spark, n):
+    """``n`` user ids whose bucket is the one a null user id hashes to."""
+    bucket = F.pmod(F.xxhash64("user_id"), F.lit(stateful.BUCKETS))
+    null_bucket = (
+        spark.range(1).select(F.lit(None).cast("string").alias("user_id")).select(bucket).first()[0]
+    )
+    ids = spark.range(20 * stateful.BUCKETS * n).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("user_id")
+    )
+    return [r.user_id for r in ids.filter(bucket == null_bucket).limit(n).collect()]
+
+
+def test_keys_sharing_a_bucket_fold_apart(spark, tmp_path):
+    """Keys of one hash bucket share a state row and a Python call, yet
+    each key's streaks are its own fold: three users chosen to share
+    the null user id's bucket, plus the null user id, over three
+    micro-batches whose lines arrive newest first."""
+    users = _users_in_null_key_bucket(spark, 3) + [None]
+    assert len(users) == 4
+    src = tmp_path / "in"
+    src.mkdir()
+
+    def warning(i, t):
+        return "no-use" if (t + i) % (i + 3) == 0 else ("critical", "simple")[t % 2]
+
+    def batch(b):
+        """Each user's events of micro-batch ``b``, oldest first."""
+        return {
+            u: [(warning(i, t), f"{1_700_000_000_000 + t:d}") for t in range(6 * b, 6 * b + 6)]
+            for i, u in enumerate(users)
+        }
+
+    lines = spark.readStream.format("text").load(str(src))
+    p = F.split(F.col("value"), ",")
+    parsed = lines.select(
+        F.nullif(F.element_at(p, 1), F.lit("")).alias("user_id"),
+        F.element_at(p, 2).alias("warning"),
+        F.element_at(p, 3).alias("machine_timestamp"),
+    )
+    q = (
+        warning_streaks(parsed, min_streak=2)
+        .writeStream.format("memory")
+        .queryName("shared_bucket")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        for b in range(3):
+            (src / f"b{b}.txt").write_text(
+                "".join(
+                    f"{u or ''},{w},{ts}\n"
+                    for u, events in batch(b).items()
+                    for w, ts in reversed(events)
+                )
+            )
+            q.processAllAvailable()
+        state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
+        got = spark.sql("SELECT * FROM shared_bucket").collect()
+    finally:
+        q.stop()
+    assert state_rows == 1  # all four keys in one bucket
+    for u in users:
+        want, streak = [], 0
+        for b in range(3):
+            for w, ts in batch(b)[u]:
+                streak = 0 if w == "no-use" else streak + 1
+                if streak >= 2:
+                    want.append((streak, ts, w))
+        mine = sorted(
+            (r.streak_len, r.machine_timestamp, r.warning) for r in got if r.user_id == str(u)
+        )
+        assert want and mine == sorted(want), u
+
+
+def test_state_rows_are_bounded_by_buckets(spark, tmp_path):
+    """The state store holds one row per bucket, not per key."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "b0.txt").write_text("".join(f"u{i},critical,1000\n" for i in range(1000)))
+    q = (
+        warning_streaks(_parse_warnings(_lines_stream(spark, src)), min_streak=1)
+        .writeStream.format("memory")
+        .queryName("bounded_state")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
+        n_out = spark.sql("SELECT * FROM bounded_state").count()
+    finally:
+        q.stop()
+    assert n_out == 1000
+    assert state_rows <= stateful.BUCKETS
+
+
+def test_per_key_checkpoint_does_not_restore(spark, tmp_path):
+    """A checkpoint holding one state row per key (the layout before
+    keys were bucketed) must fail Spark's state-schema check on
+    restart, not restore into the bucket layout."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    src = tmp_path / "in"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    out_dir = str(tmp_path / "out")
+    out_cols = [f.name for f in stateful.STREAK_OUTPUT_SCHEMA]
+
+    def per_key(key, pdfs, state):
+        import pandas as pd
+
+        n = state.get[0] if state.exists else 0
+        state.update((n + sum(len(pdf) for pdf in pdfs),))
+        yield pd.DataFrame([], columns=out_cols)
+
+    def start(out):
+        return (
+            out.writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+
+    (src / "b0.txt").write_text("u1,critical,1000\nu1,critical,1001\n")
+    q = start(
+        _parse_warnings(_lines_stream(spark, src))
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            per_key,
+            outputStructType=stateful.STREAK_OUTPUT_SCHEMA,
+            stateStructType=stateful.STREAK_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    (src / "b1.txt").write_text("u1,critical,1002\n")
+    q = start(warning_streaks(_parse_warnings(_lines_stream(spark, src)), min_streak=3))
+    try:
+        with pytest.raises(StreamingQueryException, match="STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert not spark.read.schema(stateful.STREAK_OUTPUT_SCHEMA).parquet(out_dir).count()

@@ -6,6 +6,7 @@ dedup) — the test layers SURVEY.md §5 planned."""
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
@@ -227,6 +228,47 @@ def test_append_dedup_pk(spark, tmp_path, fitbit_df):
     assert sink.read_state(spark).count() == hist.count()
     sink(hist, 1)  # replay entire content
     assert sink.read_state(spark).count() == hist.count()
+
+
+_TIE_SCHEMA = "user_id STRING, event_ts TIMESTAMP, lat DOUBLE"
+
+
+def _tie_rows(spark, *lats, partitions=1):
+    ts = datetime.datetime(2024, 1, 1)
+    rdd = spark.sparkContext.parallelize([("u1", ts, lat) for lat in lats], partitions)
+    return spark.createDataFrame(rdd, _TIE_SCHEMA)
+
+
+def test_keyed_upsert_tie_does_not_depend_on_arrival(spark, tmp_path):
+    """Two rows of one key with the same event time, fed as two
+    one-row batches in either order, leave the same winner."""
+    winners = []
+    for order in ((1.0, 2.0), (2.0, 1.0)):
+        sink = KeyedUpsertSink(str(tmp_path / f"ll_{order[0]}"), ["user_id"], ["event_ts"])
+        for i, lat in enumerate(order):
+            sink(_tie_rows(spark, lat), i)
+        winners.append([tuple(r) for r in sink.read_state(spark).collect()])
+    assert len(winners[0]) == 1 and winners[0] == winners[1]
+
+
+def test_append_dedup_tie_does_not_depend_on_arrival(spark, tmp_path):
+    """Two rows of one key with different payloads in one batch, spread
+    over two input partitions in either order, keep the same row."""
+    kept = []
+    for order in ((1.0, 2.0), (2.0, 1.0)):
+        sink = AppendDedupSink(str(tmp_path / f"uh_{order[0]}"), ["user_id", "event_ts"])
+        sink(_tie_rows(spark, *order, partitions=2), 0)
+        kept.append([tuple(r) for r in sink.read_state(spark).collect()])
+    assert len(kept[0]) == 1 and kept[0] == kept[1]
+
+
+def test_sink_rejects_rows_of_another_schema(spark, tmp_path):
+    """The state schema is read once per sink; a batch whose columns
+    differ from the stored table fails instead of being merged."""
+    sink = KeyedUpsertSink(str(tmp_path / "ll"), ["user_id"], ["event_ts"])
+    sink(_tie_rows(spark, 1.0), 0)
+    with pytest.raises(ValueError, match="holds"):
+        sink(_tie_rows(spark, 2.0).withColumn("lat", F.col("lat").cast("string")), 1)
 
 
 def test_windowed_pulse_stats_stream(spark, tmp_path):

@@ -73,9 +73,7 @@ def lines_stream(
     if source == "files":
         if path is None:
             raise ValueError("files source requires path")
-        return spark.readStream.format("text").load(path).withColumnRenamed(
-            "value", "value"
-        )
+        return spark.readStream.format("text").load(path)
     raise ValueError(f"unknown source: {source}")
 
 

@@ -48,9 +48,9 @@ from pyspark.sql.window import Window
 #: the LSH band self-join: the point where real skew doubles the join
 #: work the banding geometry budgets for, i.e. one full uniform-model's
 #: worth of surplus pairs. CANONICAL value — the production gate
-#: (queries/dedup._band_candidate_pairs) and the occupancy audit
-#: (tools/lsh_occupancy.py) both import it, so the threshold the audit
-#: reports is the threshold the gate compares against by construction.
+#: (queries/dedup._band_candidate_pairs) compares against it, and the
+#: recorded occupancy audit (docs/ARTIFACTS.md, "Sign-LSH bucket
+#: occupancy") reported its skew factor against the same constant.
 SKEW_WIRE_THRESHOLD = 2.0
 
 #: cap multiplier the wiring starts from when the threshold is
@@ -123,9 +123,9 @@ def bucket_shard(
 ) -> Column:
     """Deterministic shard id in [0, ceil(occ / cap)) for a row of an
     LSH band table — the single shard expression shared by
-    :func:`capped_bucket_self_join` and the occupancy audit
-    (tools/lsh_occupancy.py), so the audit measures the production
-    sharding by construction and cannot drift from it. Hashes
+    :func:`capped_bucket_self_join` and the recorded occupancy audit
+    (docs/ARTIFACTS.md), so the audit measured the production
+    sharding by construction. Hashes
     (id, band) — not id alone — so shard draws are independent across
     bands (the OR-construction recovery property). ``probe`` (an int
     column holding a multi-probe replica index ≥ 1) folds into the
@@ -164,8 +164,8 @@ def capped_bucket_self_join(
     deterministic shards and pairs are generated WITHIN shards only.
     This is the cap the measured occupancy audit names as the wiring
     point (docs/ARTIFACTS.md: the skew factor compounds ~1.2x per
-    corpus decade and crosses the 2x threshold at ~1e7 vectors — see
-    tools/lsh_occupancy.py).
+    corpus decade and crosses the 2x threshold at ~1e7 vectors, in its
+    "Sign-LSH bucket occupancy" section).
 
     Three properties make it wireable without ceremony:
 

@@ -1169,7 +1169,7 @@ def triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-ordered orientation so wedge work is m^1.5-bounded even on
     power-law co-purchase hubs — see operators/graph.py
     triangle_counts for the WWW'11 provenance. MEASURED, not argued
-    (round 11, tools/triangle_scale.py → docs/SCALING.md): on a
+    (docs/SCALING.md, "Triangle counting on a power-law graph"): on a
     deterministic power-law graph the oriented wedge mass stays under
     m^1.5 at 1x and 10x and grows near-linearly (8.2M vs the naive
     id-ordering's 13.8B wedges at 10x — a 1683x reduction), runtime
@@ -5103,8 +5103,9 @@ def link_prediction_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a tunable budget — cf. the degree-ordered orientation in
     `triangle_count_parts`.
 
-    Measured 100x profile (the round-12 stage decomposition —
-    tools/linkpred_profile.py, table in docs/SCALING.md): the
+    Measured 100x profile (the stage decomposition recorded in
+    docs/SCALING.md, "link_prediction_suppliers: stage-level 100x
+    profile"): the
     irreducible term is the wedge rollup itself — Σ min(deg,cap)² =
     673M wedge rows (exactly 100x the 1x wedge mass, so the cap holds
     under scale-up) hash-aggregating to 49.95M DISTINCT supplier

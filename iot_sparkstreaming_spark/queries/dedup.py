@@ -96,12 +96,10 @@ STOP_SHINGLE_MAX_DF = 50
 
 def pre_cutoff_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct ``(doc_id, s_h)`` posting rows for EVERY shingle —
-    the inverted index BEFORE the stop-shingle cutoff. Shared by the
-    :func:`_posting_list` builder and tools/ngram_postings.py's
-    document-frequency audit, so the audit measures the exact
-    production construction by CONSTRUCTION (an edit here moves both
-    the artifact fingerprint and the audit together, instead of the
-    tool silently auditing stale expressions). See
+    the inverted index BEFORE the stop-shingle cutoff, as the
+    :func:`_posting_list` builder uses it. The document-frequency audit
+    recorded in docs/SCALING.md ("dedup_ngram_jaccard: posting-list
+    sizes under the DF cutoff") measured these exact expressions. See
     :func:`_posting_list` for the full construction rationale."""
     from pyspark.sql.window import Window
 
@@ -571,11 +569,10 @@ def _band_candidate_pairs(
     with an exact countDistinct(vec_id) over the band table (O(n)
     map-side partials, one row out) — measures the skew factor =
     candidate mass Σ C(occ, 2) over the uniform-sign model's own
-    N_BANDS·n²/2^(bits+1) (the identical definition the occupancy
-    audit reports, tools/lsh_occupancy.py, which imports the SAME
+    N_BANDS·n²/2^(bits+1) (the identical definition the recorded
+    occupancy audit in docs/ARTIFACTS.md reports, against the SAME
     ``SKEW_WIRE_THRESHOLD`` / ``CAP_MULT`` constants from
-    operators/skew.py so the threshold it publishes is the threshold
-    compared against here by construction).
+    operators/skew.py).
 
     * skew < SKEW_WIRE_THRESHOLD (2.0): the naive equi-join on
       (band, bucket) is optimal and runs UNCHANGED — bitwise-identical

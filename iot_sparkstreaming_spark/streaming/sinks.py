@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -109,22 +108,25 @@ class KeyedUpsertSink(_ParquetTable):
         return _expand(merged, self.keys, F.max(F.struct(*self.order_by, *rest)))
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        # Write-new-then-rename-swap through two sibling dirs named
+        # after this sink's state dir: ``.new`` holds the merged table,
+        # the current state is renamed to ``.old``, and ``.new`` takes
+        # its place.
+        # Between those two renames no state dir exists, so a crash
+        # there is undone before the next merge reads the table:
+        # ``.old`` is renamed back, and the replayed batch merges into
+        # it. A ``.new`` left by a crash is overwritten by the next write.
+        new, old = self.state_dir + ".new", self.state_dir + ".old"
+        if os.path.isdir(old):
+            if os.path.isdir(self.state_dir):  # crash after the swap
+                shutil.rmtree(old)
+            else:  # crash between the two renames
+                os.rename(old, self.state_dir)
         merged = self._merge(batch_df)
-        # Write-new-then-rename-swap. A delete-then-rename swap has a
-        # window (between rmtree and replace) where a crash loses ALL
-        # state and a concurrent reader sees no table; renaming the
-        # current state aside first means a valid state dir exists at
-        # every instant except the single atomic os.replace.
-        tmp = tempfile.mkdtemp(
-            prefix=".upsert_", dir=os.path.dirname(self.state_dir) or "."
-        )
-        merged.write.mode("overwrite").parquet(tmp)
-        old = self.state_dir + ".old"
-        if os.path.isdir(old):  # leftover from a crash after a swap
-            shutil.rmtree(old)
+        merged.write.mode("overwrite").parquet(new)
         if os.path.isdir(self.state_dir):
             os.rename(self.state_dir, old)
-        os.replace(tmp, self.state_dir)
+        os.replace(new, self.state_dir)
         if os.path.isdir(old):
             shutil.rmtree(old)
         self._wrote(merged)

@@ -14,21 +14,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Cache the DataFrame HANDLE (logical plan + resolved file listing)
-    # per session: repeated queries over the same table skip the
-    # ~100 ms directory-listing/footer pass per spark.read call. This
-    # caches no data — scans stay pruned per-query — and the cache
-    # dies with the session object, so it can't leak across sessions.
-    cache: dict[tuple[str, str], DataFrame] = spark.__dict__.setdefault(
-        "_graft_table_cache", {}
+    """The table's DataFrame HANDLE (logical plan + resolved file
+    listing), memoized per session: repeated queries over the same
+    table skip the ~100 ms directory-listing/footer pass per
+    spark.read call. No data is cached — scans stay pruned per-query."""
+    return session_memo(
+        spark, ("table", sf_dir, name), lambda: _read_table(spark, sf_dir, name)
     )
-    key = (sf_dir, name)
-    if key in cache:
-        return cache[key]
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # events.ts has shipped as BOTH parquet TIMESTAMP(NANOS) and
         # TIMESTAMP(MICROS) across harness testdata generations, so the
@@ -41,7 +37,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_events_ts(df)
-    cache[key] = df
     return df
 
 
@@ -71,9 +66,10 @@ def session_memo(spark: SparkSession, key: tuple, builder):
     """Session-scoped memo for deterministic derived DataFrames (the
     materialized-view pattern): precomputed invariants like
     vector+norm tables or degree-annotated edge lists are built once
-    per session and reused by every query over the same inputs. Same
-    lifecycle as the table-handle cache above — dies with the session
-    object, caches plans/checkpoints, never stale across sessions."""
+    per session and reused by every query over the same inputs;
+    :func:`load_table` keeps its table handles here too. Dies with the
+    session object, caches plans/checkpoints, never stale across
+    sessions."""
     cache: dict = spark.__dict__.setdefault("_graft_memo", {})
     if key not in cache:
         cache[key] = builder()
@@ -81,11 +77,12 @@ def session_memo(spark: SparkSession, key: tuple, builder):
 
 
 def clear_session_memo(spark: SparkSession) -> None:
-    """Drop every session-memoized frame so the next access rebuilds.
-    Owns the memo's storage attribute (measurement tools that need a
-    forced rebuild — artifact_costs best-of-N trials — call this
-    instead of reaching into the private dict, which a rename would
-    silently turn into a no-op)."""
+    """Drop every session-memoized frame, table handles included, so
+    the next access rebuilds or re-lists. Owns the memo's storage
+    attribute (measurement tools that need a forced rebuild —
+    artifact_costs best-of-N trials — call this instead of reaching
+    into the private dict, which a rename would silently turn into a
+    no-op)."""
     spark.__dict__.setdefault("_graft_memo", {}).clear()
 
 

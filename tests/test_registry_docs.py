@@ -109,3 +109,63 @@ def test_generated_doc_counts_match_readme() -> None:
     m = re.search(r"cost of all (\d+) disk-tier artifacts", readme)
     assert m, "README.md lost its artifact-count sentence"
     assert int(m.group(1)) == n_arts, f"README says {m.group(1)}, ARTIFACTS has {n_arts}"
+
+
+def _tools_module(name: str):
+    import importlib
+    import sys
+    from pathlib import Path
+
+    tools = str(Path(__file__).resolve().parents[1] / "tools")
+    if tools not in sys.path:
+        sys.path.insert(0, tools)
+    return importlib.import_module(name)
+
+
+def test_write_section_touches_only_its_own_section(tmp_path) -> None:
+    """A generated doc holds free text and sections that several tools
+    write. Rewriting one section leaves every other byte as it was; a
+    missing marker appends the section at the end."""
+    write_section = _tools_module("scale10_report").write_section
+    head = "# Title\n\nfree text, `<!-- not a marker` inline\n\n"
+    a = "<!-- a: one -->\n\n## A\n\n| a | 1 |\n\n"
+    b = "<!-- b: two -->\n## B\nbody b\n\n\n"
+    c = "<!-- c: three -->\n\n## C\n\nlast line\n"
+    doc = tmp_path / "DOC.md"
+    doc.write_text(head + a + b + c)
+
+    write_section(doc, "<!-- b: two -->", ["<!-- b: two -->", "", "## B", "new body", ""])
+    assert doc.read_text() == head + a + "<!-- b: two -->\n\n## B\nnew body\n\n" + c
+
+    write_section(doc, "<!-- c: three -->", ["<!-- c: three -->", "## C", "tail"])
+    before_c = head + a + "<!-- b: two -->\n\n## B\nnew body\n\n"
+    assert doc.read_text() == before_c + "<!-- c: three -->\n## C\ntail\n"
+
+    write_section(doc, "# Title", ["# Title", "", "rewritten head", ""])
+    rest = doc.read_text().split("<!-- a: one -->", 1)[1]
+    assert doc.read_text() == "# Title\n\nrewritten head\n\n<!-- a: one -->" + rest
+
+    full = doc.read_text()
+    write_section(doc, "<!-- d: four -->", ["<!-- d: four -->", "## D"])
+    assert doc.read_text() == full + "\n<!-- d: four -->\n## D\n"
+
+    fresh = tmp_path / "NEW.md"
+    write_section(fresh, "<!-- a: one -->", ["<!-- a: one -->", "x"])
+    assert fresh.read_text() == "<!-- a: one -->\nx\n"
+
+
+def test_cited_tools_exist() -> None:
+    """Every ``tools/<name>.py`` that the README, the docs or the
+    engine's own docstrings cite is a file in tools/."""
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    sources = [repo / "README.md", *sorted((repo / "docs").glob("*.md"))]
+    sources += sorted((repo / "iot_sparkstreaming_spark").rglob("*.py"))
+    missing = {
+        f"{src.relative_to(repo)}: tools/{name}.py"
+        for src in sources
+        for name in re.findall(r"tools/(\w+)\.py", src.read_text())
+        if not (repo / "tools" / f"{name}.py").is_file()
+    }
+    assert not missing, sorted(missing)

@@ -271,6 +271,36 @@ def test_sink_rejects_rows_of_another_schema(spark, tmp_path):
         sink(_tie_rows(spark, 2.0).withColumn("lat", F.col("lat").cast("string")), 1)
 
 
+def test_keyed_upsert_replay_after_crash_between_renames(spark, tmp_path, monkeypatch):
+    """A crash after the state dir is renamed aside and before the new
+    table takes its place loses no state: a new sink object replaying
+    the batch merges it into the stored table, and no sibling dir of
+    the sink is left behind."""
+    from iot_sparkstreaming_spark.streaming import sinks
+
+    state = str(tmp_path / "ll")
+    ts = datetime.datetime(2024, 1, 1)
+
+    def rows(*users):
+        return spark.createDataFrame([(u, ts, 1.0) for u in users], _TIE_SCHEMA)
+
+    KeyedUpsertSink(state, ["user_id"], ["event_ts"])(rows("u1", "u2"), 0)
+
+    def crash(src, dst):
+        raise OSError("crash between the renames")
+
+    with monkeypatch.context() as m:
+        m.setattr(sinks.os, "replace", crash)
+        with pytest.raises(OSError, match="crash between the renames"):
+            KeyedUpsertSink(state, ["user_id"], ["event_ts"])(rows("u3"), 1)
+
+    sink = KeyedUpsertSink(state, ["user_id"], ["event_ts"])
+    sink(rows("u3"), 1)
+    users = sorted(r.user_id for r in sink.read_state(spark).collect())
+    assert users == ["u1", "u2", "u3"]
+    assert os.listdir(tmp_path) == ["ll"]
+
+
 def test_windowed_pulse_stats_stream(spark, tmp_path):
     """Tumbling window + watermark as a real stream (update mode)."""
     src = tmp_path / "win_in"

@@ -15,9 +15,8 @@ work, and round 10 proved builds can hide the super-linear term (the
 fixed-banding lsh_scored_pairs build OOM'd at 100x while its consumer
 queries looked fine at 10x). Each scale point gets a fresh store and
 runs ONE consumer query per target artifact; BUILD_TIMES attributes
-builder+save seconds per artifact. Results land in a marker-preserved
-section appended to docs/ARTIFACTS.md (the base table regeneration
-keeps it).
+builder+save seconds per artifact. Each mode rewrites only its own
+section of docs/ARTIFACTS.md (``scale10_report.write_section``).
 
 Usage: python tools/artifact_costs.py            (base table, ~4 min)
        python tools/artifact_costs.py --scale    (scale table; needs
@@ -37,9 +36,13 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from scale10_report import SCALES, decade_alphas, scale_dir, write_section  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+DOC = REPO / "docs" / "ARTIFACTS.md"
+#: the base table's section starts at the doc's title
+BASE_MARKER = "# Artifact cold-build costs (generated — do not edit)"
 SCALE_MARKER = "<!-- artifact-scale: generated by artifact_costs.py --scale -->"
-OCC_MARKER = "<!-- lsh-occupancy: generated by tools/lsh_occupancy.py -->"
 
 #: the heaviest artifacts from the base table, each with ONE consumer
 #: query that triggers its build (helpers map to a registered query)
@@ -75,7 +78,7 @@ N_TRIALS = 3
 
 def _write_base(wall: float, builds: list[tuple[str, float]], total: float) -> None:
     lines = [
-        "# Artifact cold-build costs (generated — do not edit)",
+        BASE_MARKER,
         "",
         "Regenerate with `python tools/artifact_costs.py`. One pass over",
         f"the full query registry at sf_dir={SF_DIR} against a FRESH",
@@ -92,14 +95,8 @@ def _write_base(wall: float, builds: list[tuple[str, float]], total: float) -> N
         "|---|---|",
     ]
     lines += [f"| {name} | {sec:.2f} |" for name, sec in builds]
-    out = REPO / "docs" / "ARTIFACTS.md"
-    tail = ""
-    if out.exists():
-        doc = out.read_text()
-        if SCALE_MARKER in doc:
-            tail = "\n" + doc[doc.index(SCALE_MARKER):].rstrip() + "\n"
-    out.write_text("\n".join(lines) + "\n" + tail)
-    print(f"wrote {out} ({len(builds)} artifacts, {total:.1f} s total builds)")
+    write_section(DOC, BASE_MARKER, lines)
+    print(f"wrote {DOC} ({len(builds)} artifacts, {total:.1f} s total builds)")
 
 
 def main() -> None:
@@ -137,7 +134,6 @@ def main_scale() -> None:
     from iot_sparkstreaming_spark.queries.registry import load_all
     from iot_sparkstreaming_spark.session import get_spark
     from iot_sparkstreaming_spark.tables import clear_session_memo
-    from tools.scale10_report import SCALES, scale_dir
 
     registry = load_all()
     spark = get_spark("artifact-costs-scale")
@@ -241,31 +237,20 @@ def main_scale() -> None:
     ]
     for aname, _q in SCALE_TARGETS:
         vals = [per_dir[d].get(aname) for d in dirs]
-        # per-point exponent normalized by the true scale ratio of the
-        # pair (tools/triangle_scale.py's walpha discipline): a missing
-        # 10x fixture makes the 1x->100x pair a TWO-decade span, not one
         pts = [
             (c, v)
             for (c, _d), v in zip(scaled_dirs, vals)
             if v is not None and v > 0
         ]
-        alpha = (
-            max(
-                math.log10(max(v2, 1e-3) / max(v1, 1e-3)) / math.log10(c2 / c1)
-                for (c1, v1), (c2, v2) in zip(pts, pts[1:])
-            )
+        # amortized end-to-end exponent beside the max per-decade one:
+        # the right estimator for STEPPED geometries (adaptive lsh bits
+        # move in integer steps, so per-decade candidate mass — and
+        # build time — legitimately oscillates around linear; see the
+        # lsh-occupancy section)
+        alpha, amort = (
+            (max(decade_alphas(pts)), decade_alphas([pts[0], pts[-1]])[0])
             if len(pts) > 1
-            else float("nan")
-        )
-        # amortized end-to-end exponent: the right estimator for
-        # STEPPED geometries (adaptive lsh bits move in integer steps,
-        # so per-decade candidate mass — and build time — legitimately
-        # oscillates around linear; see the lsh-occupancy section)
-        amort = (
-            math.log10(max(pts[-1][1], 1e-3) / max(pts[0][1], 1e-3))
-            / math.log10(pts[-1][0] / pts[0][0])
-            if len(pts) > 1
-            else float("nan")
+            else (float("nan"), float("nan"))
         )
         cells = " | ".join("—" if v is None else f"{v:.2f}" for v in vals)
         flag = " **super-linear**" if alpha == alpha and alpha > 1.15 else ""
@@ -283,9 +268,7 @@ def main_scale() -> None:
             f"{v2 / v1:.1f}x"
             for (_c1, v1), (_c2, v2) in zip(lsh_pts, lsh_pts[1:])
         )
-        lsh_amort = math.log10(lsh_pts[-1][1] / lsh_pts[0][1]) / math.log10(
-            lsh_pts[-1][0] / lsh_pts[0][0]
-        )
+        (lsh_amort,) = decade_alphas([lsh_pts[0], lsh_pts[-1]])
     else:
         lsh_ratios, lsh_amort = "n/a", float("nan")
     lines += [
@@ -373,19 +356,8 @@ def main_scale() -> None:
             "",
         ]
 
-    out = REPO / "docs" / "ARTIFACTS.md"
-    doc = out.read_text()
-    # preserve the lsh-occupancy tail (tools/lsh_occupancy.py appends
-    # its own marker section AFTER this one)
-    tail = ""
-    if OCC_MARKER in doc:
-        tail = "\n" + doc[doc.index(OCC_MARKER):].rstrip() + "\n"
-    if SCALE_MARKER in doc:
-        doc = doc[: doc.index(SCALE_MARKER)].rstrip() + "\n\n"
-    else:
-        doc = doc.rstrip() + "\n\n"
-    out.write_text(doc + "\n".join(lines) + "\n" + tail)
-    print(f"wrote scale section into {out}")
+    write_section(DOC, SCALE_MARKER, lines)
+    print(f"wrote scale section into {DOC}")
     spark.stop()
 
 

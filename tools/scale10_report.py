@@ -134,17 +134,79 @@ AUDIT = [
     "dedup_minhash_lsh",
 ]
 
-#: round-10 measured the fixed 4-bit sign-LSH OOM-ing the
-#: `lsh_scored_pairs` build at 100x (~n^2/16 candidates by
-#: construction); round-11 made the banding width adaptive —
-#: lsh_bits(n) = clamp(floor(log2 n) - 6, 4, 16) hyperplanes per
-#: band, oracle-mirrored from COUNT(*) — so the build is now
-#: measured at every scale point like everything else.
-SKIP_100X: set[str] = set()
-
 MARKER = "<!-- scale10: generated by tools/scale10_report.py -->"
 
 LOWER = "abcdefghijklmnopqrstuvwxyz"
+
+
+def write_section(path: str | Path, marker: str, lines: list[str]) -> None:
+    """Write one generated section of a doc. The section runs from the
+    line that starts with ``marker`` up to the next ``<!-- `` marker
+    line, or to the end of the file; it is replaced by ``lines`` and
+    every other byte stays as it was. A doc without ``marker`` gets the
+    section appended. Each tool passes only its own marker(s)."""
+    path = Path(path)
+    doc = path.read_text() if path.exists() else ""
+    text = "\n".join(lines).rstrip("\n") + "\n"
+    start = doc.find(marker)
+    while start > 0 and doc[start - 1] != "\n":
+        start = doc.find(marker, start + 1)
+    if start < 0:
+        path.write_text(doc.rstrip("\n") + "\n\n" + text if doc.strip() else text)
+        return
+    end = doc.find("\n<!-- ", start)
+    if end < 0:
+        path.write_text(doc[:start] + text)
+    else:
+        path.write_text(doc[:start] + text + "\n" + doc[end + 1 :])
+
+
+def best_of(spark, registry: dict, name: str, sf_dir: str, runs: int) -> float:
+    """Best wall-clock seconds of ``runs`` timed ``count()`` calls."""
+    t = math.inf
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        registry[name].spark(spark, sf_dir).count()
+        t = min(t, time.perf_counter() - t0)
+    return t
+
+
+def decade_alphas(pts: list[tuple[float, float]]) -> list[float]:
+    """Exponent of t ∝ data^alpha between consecutive (scale, seconds)
+    points, normalized by each pair's TRUE scale ratio (a pair that
+    spans two decades is not read as one)."""
+    return [
+        math.log10(max(t2, 1e-4) / max(t1, 1e-4)) / math.log10(c2 / c1)
+        for (c1, t1), (c2, t2) in zip(pts, pts[1:])
+    ]
+
+
+def measure(
+    spark, registry: dict, names: list[str], ladder: list[tuple[str, float]], runs: int
+) -> list[tuple[str, list[float], float]]:
+    """Warm best-of-``runs`` seconds of each query at every ``(dir,
+    scale)`` point of ``ladder``, and its max per-decade alpha."""
+    # warm-up pass: codegen + artifact builds at every scale (cold
+    # build cost is reported separately by bench.py / docs/ARTIFACTS.md)
+    for name in names:
+        for d, _scale in ladder:
+            registry[name].spark(spark, d).count()
+    # dir-OUTER timing: finish every query at one scale before
+    # touching the next, so the small-scale readings are not taken
+    # amid the block-manager/GC churn the 100x runs leave behind
+    # (measured: 1x readings 3-5x inflated when interleaved)
+    timed: dict[str, list[float]] = {n: [] for n in names}
+    for d, _scale in ladder:
+        for name in names:
+            timed[name].append(best_of(spark, registry, name, d, runs))
+    out = []
+    for name in names:
+        best = timed[name]
+        alpha = max(decade_alphas([(c, t) for (_d, c), t in zip(ladder, best)]))
+        out.append((name, best, alpha))
+        shown = " ".join(f"{t:7.2f}s" for t in best)
+        print(f"{name:32s} {shown} alpha={alpha:5.2f}")
+    return out
 
 
 def _letter_perm(copy: int) -> str:
@@ -244,8 +306,8 @@ def main() -> None:
     for copies in SCALES:
         build_fixture(spark, copies)
 
-    dirs = [BASE] + [scale_dir(c) for c in SCALES]
-    dir_scale = dict(zip(dirs, [1] + SCALES))
+    ladder = [(BASE, 1)] + [(scale_dir(c), c) for c in SCALES]
+    dirs = [d for d, _scale in ladder]
     # cheap warm-up fixture for the streaming metrics below; fall back
     # to the 1x base dir on a machine without the harness testdata so
     # the report degrades to a slower warm-up instead of crashing
@@ -253,54 +315,9 @@ def main() -> None:
     if not os.path.isdir(warm_dir):
         warm_dir = dirs[0]
 
-    def query_dirs(name: str) -> list[str]:
-        if name in SKIP_100X:
-            return [d for d, c in zip(dirs, [1] + SCALES) if c <= 10]
-        return dirs
-
-    def measure(names: list[str], runs: int) -> list[tuple[str, list[float | None], float]]:
-        # warm-up pass: codegen + artifact builds at every scale (cold
-        # build cost is reported separately by bench.py / docs/ARTIFACTS.md)
-        for name in names:
-            for d in query_dirs(name):
-                registry[name].spark(spark, d).count()
-        # dir-OUTER timing: finish every query at one scale before
-        # touching the next, so the small-scale readings are not taken
-        # amid the block-manager/GC churn the 100x runs leave behind
-        # (measured: 1x readings 3-5x inflated when interleaved)
-        timed: dict[str, list[float | None]] = {n: [] for n in names}
-        for d in dirs:
-            for name in names:
-                if d not in query_dirs(name):
-                    timed[name].append(None)
-                    continue
-                t = math.inf
-                for _ in range(runs):
-                    t0 = time.perf_counter()
-                    registry[name].spark(spark, d).count()
-                    t = min(t, time.perf_counter() - t0)
-                timed[name].append(t)
-        out = []
-        for name in names:
-            best = timed[name]
-            # max exponent of t ∝ data^alpha over measured points,
-            # normalized by the TRUE scale ratio of each consecutive
-            # pair (a skipped middle point spans two decades, not one)
-            pts = [
-                (dir_scale[d], t) for d, t in zip(dirs, best) if t is not None
-            ]
-            alpha = max(
-                math.log10(max(t2, 1e-4) / max(t1, 1e-4)) / math.log10(c2 / c1)
-                for (c1, t1), (c2, t2) in zip(pts, pts[1:])
-            )
-            out.append((name, best, alpha))
-            shown = " ".join("      —" if t is None else f"{t:7.2f}s" for t in best)
-            print(f"{name:32s} {shown} alpha={alpha:5.2f}")
-        return out
-
-    rows = measure(HEAVY15, runs=3)
-    audit_rows = measure(AUDIT, runs=2)
-    ref_rows = measure(REFERENCE8, runs=2)
+    rows = measure(spark, registry, HEAVY15, ladder, runs=3)
+    audit_rows = measure(spark, registry, AUDIT, ladder, runs=2)
+    ref_rows = measure(spark, registry, REFERENCE8, ladder, runs=2)
 
     def recheck_flags(rws, runs: int = 5):
         """Adjudicate super-linear flags: a flagged alpha must
@@ -320,95 +337,22 @@ def main() -> None:
         for name, best, alpha in rws:
             note = ""
             if alpha > 1.15:
-                pts = [
-                    (dir_scale[d], t, d)
-                    for d, t in zip(dirs, best)
-                    if t is not None
-                ]
-                (c1, _, d1), (c2, _, d2) = max(
-                    zip(pts, pts[1:]),
-                    key=lambda p: math.log10(
-                        max(p[1][1], 1e-4) / max(p[0][1], 1e-4)
-                    )
-                    / math.log10(p[1][0] / p[0][0]),
-                )
-                times = {}
-                for d in (d1, d2):
-                    t = math.inf
-                    for _ in range(runs):
-                        t0 = time.perf_counter()
-                        registry[name].spark(spark, d).count()
-                        t = min(t, time.perf_counter() - t0)
-                    times[d] = t
-                alpha2 = math.log10(
-                    max(times[d2], 1e-4) / max(times[d1], 1e-4)
-                ) / math.log10(c2 / c1)
+                alphas = decade_alphas([(c, t) for (_d, c), t in zip(ladder, best)])
+                i = alphas.index(max(alphas))
+                (d1, c1), (d2, c2) = ladder[i], ladder[i + 1]
+                t1, t2 = (best_of(spark, registry, name, d, runs) for d in (d1, d2))
+                (alpha2,) = decade_alphas([(c1, t1), (c2, t2)])
                 verdict = (
                     "reproduced"
                     if alpha2 > 1.15
                     else "did NOT reproduce — in-context GC/JIT state"
                 )
-                floor = ""
-                if name == "link_prediction_suppliers":
-                    # Re-confirm the exact-enumeration floor at the
-                    # SAME draw that adjudicates the flag (r14 verdict
-                    # task 6): the established explanation for any
-                    # near-linear link-prediction alpha is Θ(wedge
-                    # mass) work at flat throughput, so publish the
-                    # recheck's own wedge rows/s beside its alpha —
-                    # if the flag were a real plan defect, throughput
-                    # would COLLAPSE across the decade instead of
-                    # holding the 41-43 M rows/s band. Mass comes from
-                    # a bounded aggregation over the capped adjacency
-                    # (never by enumerating the wedge stream).
-                    from pyspark.sql import functions as F
-                    from pyspark.sql.functions import col
-
-                    from iot_sparkstreaming_spark.operators.graph import (
-                        wedge_adjacency,
-                    )
-                    from iot_sparkstreaming_spark.queries.analytics import (
-                        LP_MAX_DEG,
-                        _trade_pairs,
-                    )
-
-                    import gc
-
-                    thr = {}
-                    for d in (d1, d2):
-                        adj = wedge_adjacency(_trade_pairs(spark, d), LP_MAX_DEG)
-                        wm = int(
-                            adj.select(F.size("nb").alias("sz"))
-                            .agg(
-                                F.sum(
-                                    col("sz").cast("bigint") * (col("sz") - 1) / 2
-                                ).alias("wm")
-                            )
-                            # `or 0`: an empty capped adjacency sums to
-                            # NULL, and the recheck must degrade to a
-                            # 0-rate column, not kill the ~35-min run
-                            .first()["wm"]
-                            or 0
-                        )
-                        adj.unpersist()
-                        # the adjacency is localCheckpoint-backed;
-                        # unpersist alone doesn't free the checkpoint
-                        # blocks — drop the reference and let the
-                        # ContextCleaner reclaim them before the
-                        # streaming loops (linkpred_profile precedent)
-                        del adj
-                        gc.collect()
-                        thr[d] = wm / max(times[d], 1e-4) / 1e6
-                    floor = (
-                        f"; wedge throughput at this draw "
-                        f"{thr[d1]:.0f} → {thr[d2]:.0f} M wedge rows/s"
-                    )
                 note = (
                     f" (recheck of the {c1}x→{c2}x decade, isolated "
-                    f"best-of-{runs}: {times[d1]:.2f}s → {times[d2]:.2f}s, "
-                    f"alpha {alpha2:.2f} — {verdict}{floor})"
+                    f"best-of-{runs}: {t1:.2f}s → {t2:.2f}s, "
+                    f"alpha {alpha2:.2f} — {verdict})"
                 )
-                print(f"recheck {name}: alpha {alpha:.2f} -> {alpha2:.2f}{floor}")
+                print(f"recheck {name}: alpha {alpha:.2f} -> {alpha2:.2f}")
             out.append((name, best, alpha, note))
         return out
 
@@ -521,7 +465,7 @@ def main() -> None:
         out = [header, sep]
         for name, best, alpha, note in rws:
             flag = " **super-linear**" if alpha > 1.15 else ""
-            cells = " | ".join("—" if t is None else f"{t:.2f}" for t in best)
+            cells = " | ".join(f"{t:.2f}" for t in best)
             out.append(f"| {name} | {cells} | {alpha:.2f}{flag}{note} |")
         return out
 
@@ -546,12 +490,7 @@ def main() -> None:
         "neighborhood state (assortativity 24.8 s in-loop vs 12.1 s",
         "isolated, same code/data), so a flag is believed only if it",
         "reproduces; non-reproducing flags stay in the table with their",
-        "recheck numbers — both draws shown, neither erased. A",
-        "link-prediction recheck additionally records the wedge",
-        "throughput (mass / recheck seconds) at the SAME draw, so the",
-        "exact-enumeration floor claim — flat ~41-43 M wedge rows/s,",
-        "Θ(capped wedge mass) work — is re-confirmed by the very numbers",
-        "that adjudicate the flag instead of standing on an earlier run.",
+        "recheck numbers — both draws shown, neither erased.",
         "",
         "This measurement earned its keep on its first run: it caught",
         "`ann_incremental_assign` at **20.5x** for 10x data (1.62 s ->",
@@ -667,10 +606,7 @@ def main() -> None:
         "",
     ]
 
-    doc = (REPO / "docs" / "SCALING.md").read_text()
-    if MARKER in doc:
-        doc = doc[: doc.index(MARKER)].rstrip() + "\n\n"
-    (REPO / "docs" / "SCALING.md").write_text(doc + "\n".join(lines) + "\n")
+    write_section(REPO / "docs" / "SCALING.md", MARKER, lines)
     print(f"wrote scale10 section into docs/SCALING.md ({len(rows)} rows)")
     spark.stop()
 

@@ -12,20 +12,24 @@ would punish (the co-purchase triangle query is the known, documented
 case: the fixture's uniform part assignment densifies the graph
 itself, not the operator).
 
-Usage: python tools/scaling_report.py  (run from anywhere; ~4 min)
+Usage: python tools/scaling_report.py  (run from anywhere; ~10 min on 4 vCPUs)
 """
 
 from __future__ import annotations
 
-import math
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from scale10_report import measure, write_section  # noqa: E402
+
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
+#: (dir, scale factor) points of the measured ladder
+LADDER = list(zip(SFS, (0.001, 0.01, 0.1)))
+#: this report's section of docs/SCALING.md starts at the doc's title
+MARKER = "# Scaling report (generated — do not edit)"
 
 #: one per capability family; heavy known-dense graph queries are
 #: annotated rather than excluded
@@ -176,26 +180,11 @@ def main() -> None:
     spark = get_spark("scaling")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm-up: JVM + codegen + session memos at the smallest SF
-    for name, _ in SHOWCASE:
-        registry[name].spark(spark, SFS[0]).count()
-
-    rows = []
-    for name, family in SHOWCASE:
-        best = {}
-        for sf_dir in SFS:
-            t = math.inf
-            for _ in range(2):  # best-of-2, post-warm-up (memoized indexes warm)
-                t0 = time.perf_counter()
-                registry[name].spark(spark, sf_dir).count()
-                t = min(t, time.perf_counter() - t0)
-            best[sf_dir] = t
-        a1 = math.log10(max(best[SFS[1]], 1e-4) / max(best[SFS[0]], 1e-4))
-        a2 = math.log10(max(best[SFS[2]], 1e-4) / max(best[SFS[1]], 1e-4))
-        rows.append((name, family, best[SFS[0]], best[SFS[1]], best[SFS[2]], max(a1, a2)))
+    family = dict(SHOWCASE)
+    rows = measure(spark, registry, list(family), LADDER, runs=2)
 
     out = [
-        "# Scaling report (generated — do not edit)",
+        MARKER,
         "",
         "Regenerate with `python tools/scaling_report.py`. Best-of-2",
         "wall-clock seconds per scale factor (warm session: JVM, codegen,",
@@ -206,9 +195,9 @@ def main() -> None:
         "| query | family | sf0.001 | sf0.01 | sf0.1 | alpha |",
         "|---|---|---|---|---|---|",
     ]
-    for name, family, t1, t2, t3, alpha in rows:
+    for name, (t1, t2, t3), alpha in rows:
         out.append(
-            f"| {name} | {family} | {t1:.3f} | {t2:.3f} | {t3:.3f} | {alpha:.2f} |"
+            f"| {name} | {family[name]} | {t1:.3f} | {t2:.3f} | {t3:.3f} | {alpha:.2f} |"
         )
     out += [
         "",
@@ -218,24 +207,11 @@ def main() -> None:
         "`triangle_count_parts` (not listed) is quadratic-dense on THIS",
         "fixture because uniform random part assignment makes the",
         "co-purchase graph near-complete; the operator itself is",
-        "m^1.5-bounded on real power-law graphs (see its docstring and",
-        "the measured power-law section below, tools/triangle_scale.py).",
+        "m^1.5-bounded on real power-law graphs (see its docstring).",
         "",
     ]
-    # preserve the measured sections other tools maintain (triangle
-    # power-law demo, 10x/100x scale-up) — cut at whichever generated
-    # marker appears FIRST so none of them is dropped
     target = REPO / "docs" / "SCALING.md"
-    tail = ""
-    if target.exists():
-        prev = target.read_text()
-        from scale10_report import MARKER as M10  # noqa: PLC0415
-        from triangle_scale import MARKER as MTRI  # noqa: PLC0415
-
-        cut = min((prev.index(m) for m in (MTRI, M10) if m in prev), default=None)
-        if cut is not None:
-            tail = "\n" + prev[cut:]
-    target.write_text("\n".join(out) + tail)
+    write_section(target, MARKER, out)
     print(f"wrote {target} ({len(rows)} rows)")
     spark.stop()
 

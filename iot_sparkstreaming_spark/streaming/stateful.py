@@ -131,7 +131,8 @@ def _fold_groups(
             stored[key], out = fold(key, stored.get(key, init), key_rows)
             rows.extend(out)
         state.update((list(stored), list(stored.values())))
-        yield pd.DataFrame(rows, columns=out_cols)
+        if rows:  # PySpark skips empty frames; building one costs ~0.7 ms
+            yield pd.DataFrame(rows, columns=out_cols)
 
     bucket = F.pmod(F.xxhash64(*by), F.lit(BUCKETS))
     return frame.withColumn("__bucket", bucket).groupBy("__bucket").applyInPandasWithState(

@@ -444,6 +444,21 @@ def test_checkpoint_restart_resumes(spark, tmp_path):
     assert [u for _, u in seen] == ["u1", "u2"]
 
 
+def test_checkpoints_commit_through_filesystem_manager(spark, tmp_path):
+    """The engine session commits checkpoint files through
+    ``FileSystemBasedCheckpointFileManager``, whose rename forks no
+    ``readlink`` process, and keeps the state store's checkpoint
+    checksums on: the speed-up is not bought by dropping them."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+    assert spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "true"
+
+
 def test_stream_stream_interval_join(spark, tmp_path):
     """Watermarked stream-stream join: purchases match same-user
     clicks within the interval; outside-window and cross-user pairs
